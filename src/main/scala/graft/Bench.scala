@@ -303,7 +303,8 @@ object Bench {
         // Round 14 (VERDICT r13 item 5): stream rows are now MIN-OF-2
         // like the batch queries — the single-run figures swung 2–3×
         // run-to-run on identical code (r12: 19.1 s, r13: 64.7 s for
-        // stream_batched), which made every stream delta unreadable.
+        // the since-removed batched-parse stream), which made every
+        // stream delta unreadable.
         // Each run is cold: fresh state/processed/checkpoint dirs (the
         // checkpoint is what makes a re-run a no-op, so it must not be
         // shared) and the same clearCache+GC reset the batch timer uses.
@@ -328,9 +329,6 @@ object Bench {
           }.min
         val secSeq = runIngest("seq",
           graft.streaming.StreamingPipeline.workbookStream(_, _, _, _, _))
-        val secBat = runIngest("bat",
-          graft.streaming.StreamingPipeline
-            .workbookStreamBatched(_, _, _, _, _))
         val secSet = runIngest("set",
           graft.streaming.StreamingPipeline
             .workbookStreamSetBased(_, _, _, _, _))
@@ -396,8 +394,6 @@ object Bench {
         }.min
         s""","stream":{"workbooks":$nWb,"tx_rows":$rows,"sec":$secSeq,""" +
           s""""rows_per_sec":${rows / secSeq}},""" +
-          s""""stream_batched":{"workbooks":$nWb,"tx_rows":$rows,""" +
-          s""""sec":$secBat,"rows_per_sec":${rows / secBat}},""" +
           s""""stream_set_based":{"workbooks":$nWb,"tx_rows":$rows,""" +
           s""""sec":$secSet,"rows_per_sec":${rows / secSet}},""" +
           s""""stream_jsonl":{"docs":$nDocs,"sec":$secJsonl,""" +

@@ -23,9 +23,9 @@ case class BatchResult(
 
 /** The end-to-end micro-batch pipeline — the Spark-native equivalent of
   * the reference's `upload_file` flow (/root/reference/app.py:58-182):
-  * xlsx ingest → sheet validation → upload metadata → customer parse →
-  * CDC + upsert → header promotion → joins → aggregates → ranked outputs
-  * → 3-sheet xlsx export.
+  * xlsx ingest → sheet validation → customer parse → CDC + upsert →
+  * upload metadata → header promotion → joins → aggregates → ranked
+  * outputs → 3-sheet xlsx export.
   *
   * This is the reference-parity path: amounts are float64 with banker's
   * rounding, duplicate customers inflate the m:m join, repeat uploads
@@ -56,99 +56,111 @@ class Pipeline(spark: SparkSession, stateDir: String, processedDir: String,
     val filename = Paths.get(workbookPath).getFileName.toString
     require(allowedFile(filename), s"not an xlsx: $filename")
 
-    val sheets = Xlsx.readSheets(spark, workbookPath)
-    runBatchSheets(sheets, filename, timestamp)
-  }
-
-  /** Same micro-batch against already-materialized sheet frames — the
-    * entry the batched landing stream uses after its one distributed
-    * parse across all of a micro-batch's workbooks
-    * ([[graft.streaming.StreamingPipeline.workbookStreamBatched]]): per
-    * workbook it passes filtered views of the shared parse output
-    * instead of re-parsing on the driver.
-    */
-  def runBatchSheets(sheets: Map[String, DataFrame], filename: String,
-                     timestamp: String = LocalDateTime.now().toString)
-      : BatchResult = {
+    // The workbook is parsed on the driver (bounded by Xlsx.MaxRows), so
+    // the sheet row counts and the header promotion read the held rows
+    // instead of running jobs over them.
+    val sheets = Xlsx.read(workbookPath).toMap
     require(RequiredSheets.subsetOf(sheets.keySet),          // S2
       "File must contain Transactions, Customers, and Products sheets.")
-
-    val txRaw = sheets("Transactions")
-    val custRaw = sheets("Customers")
-    val prodRaw = sheets("Products")
-
-    // A5 + S6: per-sheet data row counts (minus header), dense upload id.
-    val uploadId = store.recordUpload(filename, timestamp,
-      txRaw.count() - 1, custRaw.count() - 1, prodRaw.count() - 1)
+    val Seq(tx, cust, prod) =
+      Seq("Transactions", "Customers", "Products").map(sheets)
+    val (transactions, products) = (promoted(tx), promoted(prod))
 
     // P1-P9: skip header row, parse packed records, keep file order.
-    // Cached for the batch: the CDC/upsert layer and the analytics chain
-    // materialize it several times; the cache is dropped before returning
-    // (post-return re-reads of the BatchResult frames re-derive lazily).
     val parsed = Relational.parseCustomers(
-        custRaw.where(col("_row_idx") > 0), "_c0",
+        Xlsx.toFrame(spark, cust).where(col("_row_idx") > 0), "_c0",
         passthrough = Seq("_row_idx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try runBatchImpl(parsed, txRaw, prodRaw, timestamp, uploadId)
-    finally parsed.unpersist(blocking = false)
+    // A5 + S6 + J3 + S7 + S8: per-sheet data row counts (minus header),
+    // dense upload id, CDC capture + last-wins upsert.
+    val Seq((uploadId, nChanges)) = store.applyUploads(
+      Seq((filename, tx.length - 1L, cust.length - 1L, prod.length - 1L)),
+      parsed.withColumn("_upload_seq", lit(0)), timestamp)
+    renderBatch(parsed, transactions, products, uploadId, nChanges)
   }
 
-  private def runBatchImpl(parsed: DataFrame, txRaw: DataFrame,
-                           prodRaw: DataFrame, timestamp: String,
-                           uploadId: Long): BatchResult = {
-    // J3 + S7 + S8: CDC capture + last-wins upsert.
-    val nChanges = store.applyCustomerBatch(parsed, timestamp, uploadId)
-    renderBatch(parsed, txRaw, prodRaw, uploadId, nChanges)
+  /** P10-P11 on a sheet's driver-held rows: the same relation as
+    * `Relational.promoteHeader(Xlsx.toFrame(spark, rows))`, with the
+    * names read from the first held row instead of by two jobs.
+    */
+  private def promoted(rows: Vector[Vector[String]]): DataFrame = {
+    require(rows.nonEmpty, "sheet has no header row")
+    val df = Xlsx.toFrame(spark, rows)
+    df.where(col("_row_idx") > 0).select(
+      df.columns.toSeq.tail.zipWithIndex.map { case (c, i) =>
+        col(c).as(Relational.headerName(rows.head.lift(i).orNull, i))
+      } :+ col("_row_idx"): _*)
   }
 
   /** The stateless tail of a micro-batch — joins, aggregates, ranked
     * outputs, xlsx export — for a file whose STATE effects (upload
     * metadata, CDC, upsert) were already applied, possibly as part of a
     * whole-micro-batch set-based application
-    * ([[graft.state.StateStore.applyCustomerBatchMulti]]).
+    * ([[graft.state.StateStore.applyUploads]]).
+    *
+    * @param transactions header-promoted sheet carrying `_row_idx`
+    * @param products header-promoted sheet carrying `_row_idx`
     */
-  private[graft] def renderBatch(parsed: DataFrame, txRaw: DataFrame,
-                                 prodRaw: DataFrame, uploadId: Long,
+  private[graft] def renderBatch(parsed: DataFrame, transactions: DataFrame,
+                                 products: DataFrame, uploadId: Long,
                                  nChanges: Long): BatchResult = {
-    // P10-P11: header promotion; the batch's own (possibly duplicated)
-    // customer view joins the analytics — not the deduped state table
-    // (app.py:132 uses the parsed frame; SURVEY.md §7.4.2).
-    val transactions = Relational.promoteHeader(txRaw)
-      .withColumnRenamed("_row_idx", "_tx_idx")
-    val products = Relational.promoteHeader(prodRaw).drop("_row_idx")
+    // The batch's own (possibly duplicated) customer view joins the
+    // analytics — not the deduped state table (app.py:132 uses the
+    // parsed frame; SURVEY.md §7.4.2).
     val customersBatch = parsed.withColumnRenamed("_row_idx", "_cust_idx")
 
     // J1 + J2 + P12. Row order mirrors pandas merge output (left row
     // order, then right occurrence order) via the carried indices.
     val merged = Relational.castAmount(
-        Relational.enrich(transactions, products, customersBatch))
+        Relational.enrich(transactions.withColumnRenamed("_row_idx", "_tx_idx"),
+          products.drop("_row_idx"), customersBatch))
       .orderBy("_tx_idx", "_cust_idx")
       .select("transaction_id", "customer_id", "transaction_date",
         "product_code", "amount", "payment_type", "product_name", "category",
         "unit_price", "name", "email", "dob", "address", "created_date")
 
     // A1 → A2/W1 + A3 + A4. The parity path uses the literal W1 window
-    // form: its input is one row per customer (bounded by the workbook),
-    // and unlike the two-phase scale path it caches nothing — a
-    // long-lived ingestion service must not accumulate persisted frames
-    // per batch. The scale path is the SparkEntry flagship default and
-    // is equality-tested against this form in RelationalSpec.
-    val categoryTotals = Relational.categoryTotals(merged)
-    val summary = Relational.summaryRankedWindow(categoryTotals)
-    val top = Relational.topSpenders(categoryTotals)
-    val nested = Relational.nestDetails(categoryTotals)
+    // form: its input is one row per customer (bounded by the workbook).
+    // The scale path is the SparkEntry flagship default and is
+    // equality-tested against this form in RelationalSpec.
+    //
+    // `merged` feeds the totals and the export, `categoryTotals` the
+    // summary and top sheets, so both are cached — for this call only:
+    // a long-lived ingestion service must not accumulate persisted
+    // frames per batch, so both are released before returning, and
+    // synchronously, so no block removal overlaps the next request. The
+    // totals are one row per (customer, name, category), bounded by the
+    // workbook, and the W1 window sorts them in one task anyway: cached
+    // as one partition, the summary's and top sheet's exchanges become
+    // local. The bounded summary and top sheets are collected once each
+    // and returned as local frames; `merged` and `nested` re-derive
+    // lazily when read after the call.
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    merged.persist(level)
+    val categoryTotals =
+      Relational.categoryTotals(merged).coalesce(1).persist(level)
+    try {
+      def collected(df: DataFrame): DataFrame =
+        spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*),
+          df.schema)
+      val summary = collected(Relational.summaryRankedWindow(categoryTotals))
+      val top = collected(
+        Relational.topSpenders(categoryTotals).orderBy("category"))
 
-    // S12: 3-sheet export, rows ordered as rendered (SURVEY.md §7.4.5).
-    // Size-aware (SURVEY §7.4.8): the bounded summary/top sheets always
-    // collect into the single workbook; the input-sized MergedData sheet
-    // switches to the executor-side sharded writer past shardThreshold
-    // rows, so a large upload never collects its detail on the driver.
-    Xlsx.writeAuto(s"$processedDir/processed_$uploadId.xlsx",
-      Seq("CategoryTotalsSummary" -> summary,
-        "TopSpenders" -> top.orderBy("category")),
-      "MergedData" -> merged,
-      shardThreshold)
+      // S12: 3-sheet export, rows ordered as rendered (SURVEY.md §7.4.5).
+      // Size-aware (SURVEY §7.4.8): the bounded summary/top sheets always
+      // land in the single workbook; the input-sized MergedData sheet
+      // switches to the executor-side sharded writer past shardThreshold
+      // rows, so a large upload never collects its detail on the driver.
+      Xlsx.writeAuto(s"$processedDir/processed_$uploadId.xlsx",
+        Seq("CategoryTotalsSummary" -> summary, "TopSpenders" -> top),
+        "MergedData" -> merged,
+        shardThreshold)
 
-    BatchResult(uploadId, summary, top, merged, nested, nChanges)
+      BatchResult(uploadId, summary, top, merged,
+        Relational.nestDetails(categoryTotals), nChanges)
+    } finally {
+      merged.unpersist(blocking = true)
+      categoryTotals.unpersist(blocking = true)
+    }
   }
 }

@@ -60,14 +60,20 @@ object Relational {
   def promoteHeader(df: DataFrame, idxCol: String = "_row_idx"): DataFrame = {
     val dataCols = df.columns.filter(_ != idxCol)
     val hdr = df.orderBy(col(idxCol)).select(dataCols.toSeq.map(col): _*).head()
-    val names = dataCols.indices.map { i =>
-      Option(hdr.get(i)).map(_.toString.toLowerCase).getOrElse(s"_c$i")
-    }
+    val names = dataCols.indices.map(i => headerName(hdr.get(i), i))
     val minIdx = df.agg(min(col(idxCol))).head().getLong(0)
     df.where(col(idxCol) =!= minIdx)
       .select(dataCols.toSeq.zip(names).map { case (c, n) =>
         col(c).as(n) } :+ col(idxCol): _*)
   }
+
+  /** P11 naming rule for header cell `i`: lowercased, or `_c$i` when the
+    * cell is empty. Shared by [[promoteHeader]] and the driver-side
+    * promotion of an already-parsed workbook sheet in
+    * [[graft.Pipeline.runBatch]].
+    */
+  def headerName(cell: Any, i: Int): String =
+    Option(cell).map(_.toString.toLowerCase).getOrElse(s"_c$i")
 
   /** J1 + J2 (app.py:131-132): transactions ⋈ products (m:1 — the dim is
     * tiny, so it is broadcast: no shuffle of the fact table), then

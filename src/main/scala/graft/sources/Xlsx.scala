@@ -67,23 +67,26 @@ object Xlsx {
     } finally zip.close()
   }
 
-  /** Read as DataFrames: `_row_idx` (0-based sheet row) + `_c0.._cN`
-    * string columns — the shape [[graft.operators.Relational.promoteHeader]]
-    * consumes.
-    */
+  /** Read as DataFrames, one [[toFrame]] per sheet. */
   def readSheets(spark: SparkSession, path: String): Map[String, DataFrame] =
-    read(path).map { case (name, rows) =>
-      val width = if (rows.isEmpty) 0 else rows.map(_.length).max
-      val schema = StructType(
-        StructField("_row_idx", LongType, nullable = false) +:
-        (0 until width).map(i => StructField(s"_c$i", StringType)))
-      val data = new java.util.ArrayList[Row](rows.length)
-      rows.zipWithIndex.foreach { case (r, i) =>
-        data.add(Row.fromSeq(i.toLong +: (0 until width).map(j =>
-          if (j < r.length) r(j) else null)))
-      }
-      name -> spark.createDataFrame(data, schema)
-    }.toMap
+    read(path).map { case (name, rows) => name -> toFrame(spark, rows) }.toMap
+
+  /** One parsed sheet as a local frame: `_row_idx` (0-based sheet row) +
+    * `_c0.._cN` string columns — the shape
+    * [[graft.operators.Relational.promoteHeader]] consumes.
+    */
+  def toFrame(spark: SparkSession, rows: Vector[Vector[String]]): DataFrame = {
+    val width = if (rows.isEmpty) 0 else rows.map(_.length).max
+    val schema = StructType(
+      StructField("_row_idx", LongType, nullable = false) +:
+      (0 until width).map(i => StructField(s"_c$i", StringType)))
+    val data = new java.util.ArrayList[Row](rows.length)
+    rows.zipWithIndex.foreach { case (r, i) =>
+      data.add(Row.fromSeq(i.toLong +: (0 until width).map(j =>
+        if (j < r.length) r(j) else null)))
+    }
+    spark.createDataFrame(data, schema)
+  }
 
   /** Distributed multi-workbook scan — the S1 scale path when the landing
     * zone holds MANY workbooks rather than one big one (each workbook is
@@ -171,13 +174,16 @@ object Xlsx {
     * calling this at larger sizes.
     */
   def write(path: String, sheets: Seq[(String, DataFrame)]): Unit =
-    // thunks: each sheet is collected only when its zip entry is being
-    // written, so driver peak memory is one sheet (the collected rows;
-    // the Seq conversion streams), not the sum of all sheets
-    writeParts(path, sheets.map { case (name, df) =>
-      (name, df.columns.toSeq,
-        () => df.collect().iterator.map(_.toSeq))
-    })
+    writeParts(path, sheetParts(sheets))
+
+  // thunks: each sheet is collected only when its zip entry is being
+  // written, so driver peak memory is one sheet (the collected rows; the
+  // Seq conversion streams), not the sum of all sheets
+  private def sheetParts(sheets: Seq[(String, DataFrame)])
+      : Seq[(String, Seq[String], () => Iterator[Seq[Any]])] =
+    sheets.map { case (name, df) =>
+      (name, df.columns.toSeq, () => df.collect().iterator.map(_.toSeq))
+    }
 
   /** Size-aware S12 export (SURVEY §7.4.8's "sharded sinks when inputs
     * exceed driver memory ... swap in without API change"): the small
@@ -187,24 +193,30 @@ object Xlsx {
     * rows, and above it switches to the executor-side [[writeSharded]]
     * writer (shards beside the workbook, in
     * `<path minus .xlsx>_<sheet>_shards/`), returning the shard paths —
-    * [[mergeShards]] reassembles one deliverable when required. The
-    * threshold probe is `limit(threshold+1).count()`, bounded work that
-    * never counts (or collects) the full frame on the driver: above the
-    * threshold, the big sheet's rows only ever exist executor-side.
+    * [[mergeShards]] reassembles one deliverable when required. One
+    * bounded `limit(threshold+1).collect()` both decides and, at or
+    * under the threshold, supplies the rows written; above it those
+    * rows are dropped, so driver memory stays bounded by threshold+1
+    * rows and the big sheet's full contents only ever exist
+    * executor-side.
     */
   def writeAuto(path: String, small: Seq[(String, DataFrame)],
                 big: (String, DataFrame),
                 shardThreshold: Long = DefaultShardThreshold)
       : Seq[String] = {
     val (bigName, bigDf) = big
-    // Probe limit clamps to Int.MaxValue: a threshold at/above it would
-    // otherwise wrap to a negative limit despite the Long-typed knob
-    // (at that magnitude the answer is always "not over" anyway).
-    val probe = math.min(shardThreshold + 1, Int.MaxValue.toLong).toInt
-    val over = shardThreshold < Int.MaxValue.toLong &&
-      bigDf.limit(probe).count() > shardThreshold
-    if (!over) { write(path, small :+ big); Seq.empty }
-    else {
+    // A threshold at/above Int.MaxValue would wrap the Int limit despite
+    // the Long-typed knob; at that magnitude the answer is always "not
+    // over", so the whole sheet is collected, as the writer does anyway.
+    val head =
+      if (shardThreshold < Int.MaxValue.toLong)
+        bigDf.limit((shardThreshold + 1).toInt).collect()
+      else bigDf.collect()
+    if (head.length <= shardThreshold) {
+      writeParts(path, sheetParts(small) :+
+        ((bigName, bigDf.columns.toSeq, () => head.iterator.map(_.toSeq))))
+      Seq.empty
+    } else {
       write(path, small)
       val dir = path.stripSuffix(".xlsx") + s"_${bigName}_shards"
       writeSharded(bigDf, dir, bigName)

@@ -59,20 +59,13 @@ class StateStore(spark: SparkSession, dir: String,
     * `monotonically_increasing_id`, which is neither dense nor stable).
     */
   def recordUpload(filename: String, timestamp: String, txRows: Long,
-                   custRows: Long, prodRows: Long): Long = {
-    val nextId = uploads.agg(coalesce(max("id"), lit(0L))).head().getLong(0) + 1
-    val row = spark.createDataFrame(
-      java.util.List.of(
-        Row(nextId, filename, timestamp, txRows, custRows, prodRows)),
-      Tables.uploadsSchema)
-    backend.append("uploads", row)
-    nextId
-  }
+                   custRows: Long, prodRows: Long): Long =
+    recordUploads(Seq((filename, timestamp, txRows, custRows, prodRows))).head
 
   /** S6 batched: append N upload rows in ONE write with dense ids in
-    * sequence order — the multi-workbook form of [[recordUpload]] used
-    * by the set-based landing stream (one metadata append per
-    * micro-batch instead of one per file).
+    * sequence order — the multi-workbook form of [[recordUpload]].
+    * [[applyUploads]] appends its own rows; this is the metadata-only
+    * entry.
     *
     * @param metas (filename, timestamp, txRows, custRows, prodRows) in
     *              file order
@@ -80,16 +73,18 @@ class StateStore(spark: SparkSession, dir: String,
     */
   def recordUploads(metas: Seq[(String, String, Long, Long, Long)])
       : Seq[Long] = {
-    if (metas.isEmpty) return Seq.empty
     val base = uploads.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
-    val rows = metas.zipWithIndex.map { case ((fn, ts, t, c, p), i) =>
-      Row(base + i + 1L, fn, ts, t, c, p)
-    }
-    backend.append("uploads", spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
-      Tables.uploadsSchema))
-    metas.indices.map(base + _ + 1L)
+    val ids = metas.indices.map(base + _ + 1L)
+    appendUploads(metas.zip(ids).map { case ((fn, ts, t, c, p), id) =>
+      Row(id, fn, ts, t, c, p) })
+    ids
   }
+
+  private def appendUploads(rows: Seq[Row]): Unit =
+    if (rows.nonEmpty)
+      backend.append("uploads", spark.createDataFrame(
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
+        Tables.uploadsSchema))
 
   /** Content-digest ingest ledger (idempotent re-ingest twin — see
     * [[graft.model.Tables.uploadDigestsSchema]]).
@@ -135,104 +130,49 @@ class StateStore(spark: SparkSession, dir: String,
       Tables.uploadDigestsSchema).coalesce(1))
   }
 
-  /** J3 + S7 + S8 (app.py:110-123): CDC against *mutating intra-batch
-    * state* plus last-writer-wins upsert, set-based.
+  /** One state application for N uploads (S6 + J3 + S7 + S8,
+    * app.py:86-123): allocates the uploads' dense ids, captures their
+    * address changes, upserts the customers and only then appends the
+    * N upload rows. The per-file [[graft.Pipeline.runBatch]] calls it
+    * with one file, the set-based landing stream with a micro-batch's
+    * files, so both share the CDC plan of [[applyBatch]].
     *
-    * For the k-th occurrence of a customer in file order, the "old"
-    * address is the (k-1)-th occurrence's address, or the stored state for
-    * k=1 — expressed as `coalesce(lag(address) over file-order, stored)`.
-    * A change row is emitted whenever old exists and differs, so repeat
-    * uploads of a file with intra-batch duplicates re-toggle addresses
-    * every time (4 changes then 8 per repeat on the reference sample —
-    * deliberately non-idempotent, SURVEY.md §7.4.3).
+    * Because the upload rows commit last, a crash anywhere before them
+    * leaves no upload row for the attempt, and the at-least-once replay
+    * allocates the SAME ids again; the attempt's change rows are then
+    * orphans (an upload id at or above the new ids) that the replay
+    * absorbs instead of double-logging. A crash after the customers
+    * swap but before the upload rows replays against the upserted
+    * state; cross-table atomicity beyond this needs a transactional
+    * table format (a [[StateBackend]] drop-in).
+    *
+    * @param files (filename, txRows, custRows, prodRows) in file order
+    * @param batch parsed customer rows carrying `_upload_seq` (0-based
+    *              index into `files`) and `_row_idx`
+    * @return (upload id, change-row count) per file, in file order
+    */
+  def applyUploads(files: Seq[(String, Long, Long, Long)],
+                   batch: DataFrame, timestamp: String): Seq[(Long, Long)] = {
+    val (ids, changes) = applyBatch(batch, timestamp,
+      maxUpload => files.indices.map(maxUpload + _ + 1L))
+    appendUploads(files.zip(ids).map { case ((fn, t, c, p), id) =>
+      Row(id, fn, timestamp, t, c, p) })
+    ids.map(id => id -> changes(id))
+  }
+
+  /** J3 + S7 + S8 (app.py:110-123) for one file under a caller-allocated
+    * upload id: the one-file case of [[applyCustomerBatchMulti]].
     *
     * @param batch parsed customer rows carrying `_row_idx` (file order)
     * @return number of change rows captured
     */
-  /** Note: this method materializes `batch` three times (change count,
-    * change write, upsert write) — callers whose batch lineage is
-    * expensive (e.g. a workbook parse) should persist it for the call
-    * and unpersist afterwards, as [[graft.Pipeline.runBatch]] does;
-    * caching is deliberately caller-owned so an already-cached frame is
-    * not clobbered here.
-    */
   def applyCustomerBatch(batch: DataFrame, timestamp: String,
-                         uploadId: Long): Long = {
-    val occ = Window.partitionBy("customer_id").orderBy("_row_idx")
-    val stored = customers.select(col("customer_id"),
-      col("address").as("_stored_address"))
-    val withOld = batch
-      .join(stored, Seq("customer_id"), "left")
-      .withColumn("_old",
-        coalesce(lag("address", 1).over(occ), col("_stored_address")))
+                         uploadId: Long): Long =
+    applyCustomerBatchMulti(batch.withColumn("_upload_seq", lit(0)),
+      timestamp, Seq(uploadId))(uploadId)
 
-    val changes = withOld
-      .where(col("_old").isNotNull && col("_old") =!= col("address"))
-      .select(col("customer_id"), col("_old").as("old_address"),
-        col("address").as("new_address"),
-        lit(timestamp).as("change_timestamp"),
-        lit(uploadId).as("upload_id"), col("_row_idx"))
-
-    // Crash consistency across the two tables: the change append commits
-    // BEFORE the customers rewrite, so a crash between them leaves
-    // orphaned change rows for this upload id; the per-file ledger then
-    // replays the batch under the SAME upload id, and this rewrite
-    // absorbs the orphans instead of double-logging them (change ids
-    // stay dense and the log reflects the attempt that actually updated
-    // the state). Normal operation pays only the take-1 probe — the
-    // rewrite runs on replay alone. Cross-table atomicity beyond this
-    // needs a transactional table format (a [[StateBackend]] drop-in).
-    if (!addressChanges.where(col("upload_id") === uploadId).isEmpty)
-      backend.rewrite("address_changes",
-        addressChanges.where(col("upload_id") =!= uploadId))
-
-    // Dense change ids in file order. The unpartitioned window only ever
-    // sees this batch's change rows (a per-batch trickle), not the corpus.
-    val maxId =
-      addressChanges.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
-    val idd = changes.withColumn("id",
-        (lit(maxId) + row_number().over(Window.orderBy("_row_idx")))
-          .cast("long"))
-      .select(Tables.addressChangesSchema.fieldNames.toSeq.map(col): _*)
-
-    val nChanges = idd.count()
-    if (nChanges > 0)
-      backend.append("address_changes", idd)
-
-    // S7 upsert: last occurrence in file order wins within the batch.
-    val lastWins = batch
-      .withColumn("_rn",
-        row_number().over(
-          Window.partitionBy("customer_id").orderBy(desc("_row_idx"))))
-      .where(col("_rn") === 1)
-      .select(col("customer_id"), col("name"), col("email"), col("dob"),
-        col("address"), col("created_date"), lit(uploadId).as("upload_id"))
-    val newState = customers
-      .join(lastWins.select("customer_id"), Seq("customer_id"), "left_anti")
-      .unionByName(lastWins)
-
-    backend.rewrite("customers", newState)
-    nChanges
-  }
-
-  /** Multi-workbook form of [[applyCustomerBatch]]: applies a whole
-    * micro-batch's customer rows — N workbooks, concatenated in file
-    * order — with ONE CDC pass and ONE customers swap, instead of N
-    * sequential swaps. This is the SURVEY §2.3 J3 lag-chain extended
-    * across files: the occurrence window orders by
-    * (`_upload_seq`, `_row_idx`), so file k's first occurrence of a
-    * customer lags to file k−1's last occurrence — exactly the stored
-    * state a sequential per-file application would have seen after file
-    * k−1's upsert. Provably equivalent to folding [[applyCustomerBatch]]
-    * over the files (StateStoreSpec asserts the equivalence, and the
-    * 4-then-8 re-toggle contract holds across the batch boundary).
-    *
-    * Change rows attribute to the upload id of the file they occurred
-    * in; change ids stay dense in (file, row) order; the last-wins
-    * upsert winner carries its own file's upload id — all identical to
-    * the sequential fold. Crash consistency: orphan absorption matches
-    * on the batch's whole upload-id set, so an at-least-once replay of
-    * the micro-batch absorbs every file's orphaned change rows at once.
+  /** J3 + S7 + S8 for N files under caller-allocated upload ids (no
+    * upload rows are written — see [[applyUploads]]).
     *
     * @param batch parsed customer rows carrying `_upload_seq` (0-based
     *              file index within the batch) and `_row_idx`
@@ -240,60 +180,93 @@ class StateStore(spark: SparkSession, dir: String,
     * @return change-row count per upload id (0 for files with none)
     */
   def applyCustomerBatchMulti(batch: DataFrame, timestamp: String,
-                              uploadIds: Seq[Long]): Map[Long, Long] = {
-    require(uploadIds.nonEmpty, "applyCustomerBatchMulti: no uploads")
+                              uploadIds: Seq[Long]): Map[Long, Long] =
+    applyBatch(batch, timestamp, _ => uploadIds)._2
+
+  /** CDC against *mutating intra-batch state* plus last-writer-wins
+    * upsert, set-based, across N files concatenated in file order.
+    *
+    * For the k-th occurrence of a customer in (file, row) order, the
+    * "old" address is the (k-1)-th occurrence's address, or the stored
+    * state for k=1 — `coalesce(lag(address), stored)` over one window
+    * per customer. File k's first occurrence thus lags to file k−1's
+    * last one, exactly the state a sequential per-file application
+    * would have seen, so the N-file form equals folding the one-file
+    * form over the files (StateStoreSpec asserts it). A change row is
+    * emitted whenever old exists and differs, so repeat uploads of a
+    * file with intra-batch duplicates re-toggle addresses every time (4
+    * changes then 8 per repeat on the reference sample — deliberately
+    * non-idempotent, SURVEY.md §7.4.3). The same window marks each
+    * customer's last occurrence (`lead IS NULL`), the upsert winner,
+    * which carries its own file's upload id.
+    *
+    * That window frame is the only batch-sized materialization: it is
+    * persisted for the call, and the change count, the change append
+    * and the upsert all read it. Change ids stay dense in (file, row)
+    * order. One query reads the current max upload id, max change id
+    * and max change upload id; `uploadIdsFor` turns the first into the
+    * batch's ids, and a change row at or above the lowest of them is an
+    * orphan of a crashed attempt under the same ids (see
+    * [[applyUploads]]), removed before the new rows are appended.
+    *
+    * @return the upload ids and the change-row count per upload id
+    */
+  private def applyBatch(batch: DataFrame, timestamp: String,
+                         uploadIdsFor: Long => Seq[Long])
+      : (Seq[Long], Map[Long, Long]) = {
+    val noId = lit(null).cast("long")
+    val maxes = uploads.select(col("id").as("u"), noId.as("c"), noId.as("cu"))
+      .unionByName(addressChanges.select(noId.as("u"), col("id").as("c"),
+        col("upload_id").as("cu")))
+      .select(Seq("u", "c", "cu").map(c => coalesce(max(c), lit(0L))): _*)
+      .head()
+    val uploadIds = uploadIdsFor(maxes.getLong(0))
+    require(uploadIds.nonEmpty, "applyBatch: no uploads")
+    val maxChangeId =
+      if (maxes.getLong(2) < uploadIds.min) maxes.getLong(1)
+      else {
+        backend.rewrite("address_changes",
+          addressChanges.where(col("upload_id") < uploadIds.min))
+        addressChanges.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
+      }
+
     val idForSeq = element_at(
       array(uploadIds.map(lit): _*), col("_upload_seq") + 1).cast("long")
     val occ = Window.partitionBy("customer_id")
       .orderBy("_upload_seq", "_row_idx")
     val stored = customers.select(col("customer_id"),
       col("address").as("_stored_address"))
-    val withOld = batch
+    val occurrences = batch
       .join(stored, Seq("customer_id"), "left")
       .withColumn("_old",
         coalesce(lag("address", 1).over(occ), col("_stored_address")))
-
-    val changes = withOld
-      .where(col("_old").isNotNull && col("_old") =!= col("address"))
-      .select(col("customer_id"), col("_old").as("old_address"),
-        col("address").as("new_address"),
-        lit(timestamp).as("change_timestamp"),
-        idForSeq.as("upload_id"), col("_upload_seq"), col("_row_idx"))
-
-    if (!addressChanges.where(col("upload_id").isin(uploadIds: _*)).isEmpty)
-      backend.rewrite("address_changes",
-        addressChanges.where(!col("upload_id").isin(uploadIds: _*)))
-
-    val maxId =
-      addressChanges.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
-    val idd = changes.withColumn("id",
-        (lit(maxId) + row_number().over(
-          Window.orderBy("_upload_seq", "_row_idx"))).cast("long"))
-      .select(Tables.addressChangesSchema.fieldNames.toSeq.map(col): _*)
+      .withColumn("_last", lead("_row_idx", 1).over(occ).isNull)
+      .withColumn("upload_id", idForSeq)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // The change rows are a batch's trickle: as one partition, the
+      // count and the file-order id window need no exchange.
+      val changes = occurrences
+        .where(col("_old").isNotNull && col("_old") =!= col("address"))
+        .coalesce(1)
+      val counts = changes.groupBy("upload_id").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      if (counts.nonEmpty)
+        backend.append("address_changes", changes
+          .withColumn("id", (lit(maxChangeId) + row_number().over(
+            Window.orderBy("_upload_seq", "_row_idx"))).cast("long"))
+          .select(col("id"), col("customer_id"),
+            col("_old").as("old_address"), col("address").as("new_address"),
+            lit(timestamp).as("change_timestamp"), col("upload_id")))
 
-    val perUpload =
-      try {
-        val counts = idd.groupBy("upload_id").count().collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        if (counts.valuesIterator.sum > 0) backend.append("address_changes", idd)
-        uploadIds.map(id => id -> counts.getOrElse(id, 0L)).toMap
-      } finally idd.unpersist(blocking = false)
-
-    // S7 upsert: the batch-global last occurrence wins — (file, row)
-    // descending — and carries its file's upload id.
-    val lastWins = batch
-      .withColumn("_rn",
-        row_number().over(Window.partitionBy("customer_id")
-          .orderBy(desc("_upload_seq"), desc("_row_idx"))))
-      .where(col("_rn") === 1)
-      .select(col("customer_id"), col("name"), col("email"), col("dob"),
-        col("address"), col("created_date"), idForSeq.as("upload_id"))
-    val newState = customers
-      .join(lastWins.select("customer_id"), Seq("customer_id"), "left_anti")
-      .unionByName(lastWins)
-
-    backend.rewrite("customers", newState)
-    perUpload
+      val lastWins = occurrences.where(col("_last"))
+        .select("customer_id", "name", "email", "dob", "address",
+          "created_date", "upload_id")
+      backend.rewrite("customers", customers
+        .join(broadcast(lastWins.select("customer_id")), Seq("customer_id"),
+          "left_anti")
+        .unionByName(lastWins))
+      (uploadIds, uploadIds.map(id => id -> counts.getOrElse(id, 0L)).toMap)
+    } finally occurrences.unpersist(blocking = true)
   }
 }

@@ -52,19 +52,6 @@ object StreamingPipeline {
       .select(col("window.start").as("window_start"), col("event_type"),
               col("n_events"), col("total_value"))
 
-  /** Run the windowed aggregate to a parquet sink (append mode — only
-    * watermark-finalized windows are emitted).
-    */
-  def runEventAggregate(spark: SparkSession, sourceDir: String,
-                        outDir: String, checkpointDir: String)
-      : StreamingQuery =
-    windowedCounts(eventStream(spark, sourceDir)).writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-
   /** Watermarked gap-based session windows via native `session_window` —
     * the incremental form of [[graft.operators.EventOps.sessionize]]
     * (same gap semantics): sessions merge as events arrive and emit once
@@ -387,8 +374,10 @@ object StreamingPipeline {
             scala.jdk.CollectionConverters.ListHasAsScala(
               java.nio.file.Files.readAllLines(ledger)).asScala.toSet
           else Set.empty
-        batch.select("path").orderBy("path").collect().foreach { r =>
-          val raw = r.getString(0)
+        // Path order, sorted on the driver: the listing is one
+        // micro-batch's file names, so a distributed sort only adds jobs.
+        val raws = batch.select("path").collect().map(_.getString(0)).sorted
+        raws.foreach { raw =>
           if (!done.contains(raw)) {
             pipeline.runBatch(raw.stripPrefix("file:"))
             java.nio.file.Files.writeString(ledger, raw + "\n",
@@ -474,102 +463,17 @@ object StreamingPipeline {
       .start()
   }
 
-  /** [[workbookStream]] with the landing-file parse batched ACROSS the
-    * micro-batch's workbooks: instead of one driver-side zip parse per
-    * workbook per sheet, each required sheet is scanned once per
-    * micro-batch with [[graft.sources.Xlsx.readSheetAcrossWorkbooks]]
-    * (executors parse workbooks in parallel, `_source` carries
-    * provenance) and each workbook's batch run consumes filtered views
-    * of the three cached frames. Upload/CDC/upsert sequencing stays
-    * strictly per-workbook in path order — only the PARSE is batched, so
-    * state semantics (dense ids, toggle behavior, per-file ledger) are
-    * identical to [[workbookStream]].
-    *
-    * Sheet widths derive from EVERY workbook in the batch: the one-pass
-    * [[graft.sources.Xlsx.readSheetAcrossWorkbooksAuto]] scan takes the
-    * max cell count over the same cached parse it projects from, so a
-    * heterogeneous landing zone with a wider later workbook widens the
-    * scan instead of silently dropping its extra columns (ADVICE r7 —
-    * by construction, and without the separate probe parse that halved
-    * ingest throughput). Sheet presence (S2) is
-    * validated per workbook by requiring at least the header row in
-    * each required sheet — [[graft.sources.Xlsx.readSheetAcrossWorkbooks]]
-    * is lenient and yields zero rows for a missing sheet.
-    */
-  def workbookStreamBatched(spark: SparkSession, landingDir: String,
-                            stateDir: String, processedDir: String,
-                            checkpointDir: String,
-                            shardThreshold: Long =
-                              graft.sources.Xlsx.DefaultShardThreshold)
-      : StreamingQuery = {
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.[xX][lL][sS][xX]")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(landingDir)
-      .select("path", "modificationTime")
-    val sheetsWanted = Seq("Transactions", "Customers", "Products")
-    files.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pipeline =
-          new Pipeline(spark, stateDir, processedDir, shardThreshold)
-        val ledger =
-          java.nio.file.Paths.get(checkpointDir, "processed_paths.txt")
-        val done: Set[String] =
-          if (java.nio.file.Files.exists(ledger))
-            scala.jdk.CollectionConverters.ListHasAsScala(
-              java.nio.file.Files.readAllLines(ledger)).asScala.toSet
-          else Set.empty
-        val raws = batch.select("path").orderBy("path").collect()
-          .map(_.getString(0)).filterNot(done.contains)
-        if (raws.nonEmpty) {
-          val paths = raws.map(_.stripPrefix("file:")).toSeq
-          // ONE distributed scan per sheet for the whole micro-batch;
-          // widths derive from the SAME parsed rows (max cell count), so
-          // the ADVICE-r7 every-workbook-widens guarantee holds without
-          // the former second probe parse per workbook.
-          val parsed = sheetsWanted.map { s =>
-            s -> graft.sources.Xlsx
-              .readSheetAcrossWorkbooksAuto(spark, paths, s)
-          }.toMap
-          try {
-            raws.zip(paths).foreach { case (raw, p) =>
-              val sheets = sheetsWanted.map { s =>
-                val df = parsed(s)._1.where(col("_source") === p)
-                  .drop("_source")
-                require(!df.isEmpty,                         // S2 proxy
-                  s"File must contain Transactions, Customers, and " +
-                    s"Products sheets. ($p: $s missing or empty)")
-                s -> df
-              }.toMap
-              pipeline.runBatchSheets(sheets,
-                java.nio.file.Paths.get(p).getFileName.toString)
-              java.nio.file.Files.writeString(ledger, raw + "\n",
-                java.nio.file.StandardOpenOption.CREATE,
-                java.nio.file.StandardOpenOption.APPEND)
-            }
-          } finally parsed.values.foreach(_._2())
-        }
-      }
-      .start()
-  }
-
   /** The fully set-based landing stream: ONE distributed parse per sheet
-    * (as [[workbookStreamBatched]]) **and ONE state application per
-    * micro-batch** — upload metadata for all N files appended in one
-    * write, the CDC lag-chain ordered by (file, row) across the whole
-    * batch, one customers swap
-    * ([[graft.state.StateStore.applyCustomerBatchMulti]], provably
-    * equivalent to the sequential per-file fold). The remaining per-file
-    * work is the stateless render/export tail, which reads only its own
-    * file's rows. This removes the N-swap serialization that dominated
-    * [[workbookStreamBatched]]'s ingest time (Bench reports all three
-    * variants).
+    * across the micro-batch's workbooks (executors parse workbooks in
+    * parallel, `_source` carries provenance) **and ONE state application
+    * per micro-batch** — the CDC lag-chain ordered by (file, row) across
+    * the whole batch, one customers swap, then upload metadata for all N
+    * files appended in one write
+    * ([[graft.state.StateStore.applyUploads]], provably equivalent to
+    * the sequential per-file fold). The remaining per-file work is the
+    * stateless render/export tail, which reads only its own file's rows.
+    * This removes the N-swap serialization of the per-file
+    * [[workbookStream]] (Bench reports both).
     *
     * Semantics deltas vs the sequential forms, both inherent to batch
     * application and documented here as the contract:
@@ -616,8 +520,8 @@ object StreamingPipeline {
             scala.jdk.CollectionConverters.ListHasAsScala(
               java.nio.file.Files.readAllLines(ledger)).asScala.toSet
           else Set.empty
-        val raws = batch.select("path").orderBy("path").collect()
-          .map(_.getString(0)).filterNot(done.contains)
+        val raws = batch.select("path").collect().map(_.getString(0))
+          .sorted.filterNot(done.contains)
         if (raws.nonEmpty) {
           val paths = raws.map(_.stripPrefix("file:")).toSeq
           // ONE distributed scan per sheet; widths derive from the same
@@ -643,11 +547,10 @@ object StreamingPipeline {
                   s"Products sheets. ($p: $s missing or empty)")
             val timestamp = java.time.LocalDateTime.now().toString
             val metas = paths.map { p =>
-              (java.nio.file.Paths.get(p).getFileName.toString, timestamp,
+              (java.nio.file.Paths.get(p).getFileName.toString,
                 counts("Transactions")(p) - 1, counts("Customers")(p) - 1,
                 counts("Products")(p) - 1)
             }
-            val uploadIds = pipeline.store.recordUploads(metas)
             val seqDf = broadcast(spark.createDataFrame(
               scala.jdk.CollectionConverters.SeqHasAsJava(
                 paths.zipWithIndex.map { case (p, i) =>
@@ -660,17 +563,18 @@ object StreamingPipeline {
               .join(seqDf, Seq("_source"))
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              val changeCounts = pipeline.store.applyCustomerBatchMulti(
-                parsedCust.drop("_source"), timestamp, uploadIds)
-              raws.zip(paths).zipWithIndex.foreach { case ((raw, p), i) =>
+              val applied = pipeline.store.applyUploads(metas,
+                parsedCust.drop("_source"), timestamp)
+              raws.zip(paths).zip(applied).foreach {
+                case ((raw, p), (uploadId, nChanges)) =>
+                def sheet(s: String) = graft.operators.Relational
+                  .promoteHeader(parsed(s).where(col("_source") === p)
+                    .drop("_source"))
                 pipeline.renderBatch(
                   parsedCust.where(col("_source") === p)
                     .drop("_source", "_upload_seq"),
-                  parsed("Transactions").where(col("_source") === p)
-                    .drop("_source"),
-                  parsed("Products").where(col("_source") === p)
-                    .drop("_source"),
-                  uploadIds(i), changeCounts(uploadIds(i)))
+                  sheet("Transactions"), sheet("Products"),
+                  uploadId, nChanges)
                 java.nio.file.Files.writeString(ledger, raw + "\n",
                   java.nio.file.StandardOpenOption.CREATE,
                   java.nio.file.StandardOpenOption.APPEND)

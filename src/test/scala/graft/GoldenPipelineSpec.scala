@@ -105,6 +105,62 @@ class GoldenPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("job budget: one steady-state upload stays within its Spark jobs") {
+    // Measured when the upload's actions were fused; a change that adds
+    // jobs to the upload path must raise it knowingly.
+    val budget = 20
+    // A workbook of the reference's shape, built here so the budget is
+    // checked without the sample: repeat customer ids (the m:m fan-out
+    // and intra-batch toggles) make the change append run on every
+    // repeat upload, as on the sample.
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_jobs").toString
+    val rnd = new scala.util.Random(7)
+    val wb = s"$dir/jobs.xlsx"
+    graft.sources.Xlsx.write(wb, Seq(
+      "Transactions" -> (1 to 400).map(i => (s"TXN$i",
+          s"C${rnd.nextInt(60)}", (45000 + rnd.nextInt(300)).toString,
+          s"P${rnd.nextInt(8)}", (rnd.nextInt(100000) / 100.0).toString,
+          "Cash"))
+        .toDF("transaction_id", "customer_id", "transaction_date",
+          "product_code", "amount", "payment_type"),
+      "Customers" -> ((0 until 60) ++ (0 until 6)).zipWithIndex
+        .map { case (c, i) =>
+          Tuple1(s"{C${c}_Name ${c}_n$c@x_1990-01-01_Addr $c-${i / 60}_43899.5}")
+        }.toDF("customer_id-name-email-dob-address-created-date"),
+      "Products" -> (0 until 8).map(i =>
+          (s"P$i", s"Prod $i", s"Cat${i % 4}", "10"))
+        .toDF("product_code", "product_name", "category", "unit_price")))
+
+    withPipeline { p =>
+      p.runBatch(wb, timestamp = "2026-01-01T00:00:00")  // creates state
+      val sc = spark.sparkContext
+      // The listener bus is asynchronous: empty it before and after, the
+      // way a profiler does (its waitUntilEmpty is not public API).
+      def drain(): Unit = {
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+          .invoke(bus, java.lang.Long.valueOf(10000L))
+      }
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      drain()
+      sc.addSparkListener(listener)
+      val r = try {
+        val r = p.runBatch(wb, timestamp = "2026-01-02T00:00:00")
+        drain()
+        r
+      } finally sc.removeSparkListener(listener)
+      assert(r.nChanges > 0)
+      assert(jobs.get() <= budget,
+        s"${jobs.get()} jobs for one upload")
+    }
+  }
+
   test("rejects workbooks without the required sheets (S2) and bad extensions (S3)") {
     val tmp = Files.createTempDirectory("graft_badwb").toString
     val p = new Pipeline(spark, s"$tmp/state", s"$tmp/processed")

@@ -179,6 +179,57 @@ class StateStoreSpec extends AnyFunSuite {
       .map(_.getAs[Long]("id")).toSeq === Seq(1L, 2L))
   }
 
+  test("a crash at the customers swap replays under the SAME upload id: " +
+       "one uploads row, dense change ids, no doubled change rows") {
+    import org.apache.spark.sql.functions.lit
+    val dir = Files.createTempDirectory("graft_state_crash")
+    val inner = new graft.state.ParquetSwapBackend(spark, dir)
+    var crashes = 0
+    // Fails the next `crashes` customers rewrites — after the change
+    // rows of the same application were appended.
+    val flaky = new graft.state.StateBackend {
+      def read(name: String, schema: org.apache.spark.sql.types.StructType) =
+        inner.read(name, schema)
+      def append(name: String, df: org.apache.spark.sql.DataFrame) =
+        inner.append(name, df)
+      def rewrite(name: String, df: org.apache.spark.sql.DataFrame) = {
+        if (name == "customers" && crashes > 0) {
+          crashes -= 1
+          throw new IllegalStateException("crash before the customers swap")
+        }
+        inner.rewrite(name, df)
+      }
+      def recoverAll() = inner.recoverAll()
+    }
+    def upload(s: StateStore, file: String,
+               rows: (String, String, Long)*): Seq[(Long, Long)] =
+      s.applyUploads(Seq((file, 1L, rows.size.toLong, 1L)),
+        batch(rows: _*).withColumn("_upload_seq", lit(0)), "t")
+
+    val s = new StateStore(spark, dir.toString, Some(flaky))
+    assert(upload(s, "f1.xlsx", ("C1", "a", 0), ("C2", "x", 1)) ===
+      Seq((1L, 0L)))
+    val second = Seq(("C1", "b", 0L), ("C2", "y", 1L), ("C1", "c", 2L))
+    crashes = 1
+    intercept[IllegalStateException](upload(s, "f2.xlsx", second: _*))
+    assert(s.addressChanges.count() === 3L)   // the orphaned attempt
+
+    // The at-least-once replay, in a restarted store.
+    val replay = new StateStore(spark, dir.toString, Some(flaky))
+    assert(upload(replay, "f2.xlsx", second: _*) === Seq((2L, 3L)))
+    assert(replay.uploadsOrdered.collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[String]("filename"))).toSeq ===
+      Seq((2L, "f2.xlsx"), (1L, "f1.xlsx")))
+    assert(replay.addressChanges.orderBy("id").collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[String]("customer_id"),
+       r.getAs[String]("new_address"), r.getAs[Long]("upload_id"))).toSeq ===
+      Seq((1L, "C1", "b", 2L), (2L, "C2", "y", 2L), (3L, "C1", "c", 2L)))
+    assert(replay.customers.collect().map(r =>
+      (r.getAs[String]("customer_id"), r.getAs[String]("address"),
+       r.getAs[Long]("upload_id"))).toSet ===
+      Set(("C1", "c", 2L), ("C2", "y", 2L)))
+  }
+
   test("no change rows for brand-new customers or unchanged addresses") {
     val s = newStore()
     assert(s.applyCustomerBatch(batch(("C1", "a", 0)), "t1", 1) === 0)

@@ -546,40 +546,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.head.count(_ == "transaction_id") === 1)
   }
 
-  test("batched-parse workbook stream reaches the same state as the " +
-       "per-file stream, including CDC re-toggle sequencing") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbstream_b").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    // Two copies of the SAME workbook in one micro-batch: the second
-    // must re-toggle addresses against the state the first left behind
-    // (4 then 8 change rows — the reference's non-idempotent repeat
-    // semantics), which only holds if the batched parse still applies
-    // workbooks strictly sequentially.
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/a_Txn_Details.xlsx"))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/b_Txn_Details.xlsx"))
-
-    val q = StreamingPipeline.workbookStreamBatched(spark, landing,
-      s"$dir/state", s"$dir/processed", s"$dir/ckpt")
-    try {
-      q.processAllAvailable()
-      val store = new graft.state.StateStore(spark, s"$dir/state")
-      assert(store.uploads.count() === 2L)
-      assert(store.customers.count() === 100L)
-      assert(store.addressChanges.count() === 12L)  // 4 + 8
-      assert(store.addressChanges
-        .where(org.apache.spark.sql.functions.col("upload_id") === 1L)
-        .count() === 4L)
-      // restart-safety: nothing reprocessed on an empty trigger
-      q.processAllAvailable()
-      assert(store.uploads.count() === 2L)
-    } finally q.stop()
-  }
-
   test("set-based workbook stream: one state application per micro-batch " +
        "reaches the sequential stream's exact state, incl. 4-then-8 toggles") {
     val sample = "/root/reference/uploads/Txn_Details.xlsx"
@@ -587,10 +553,11 @@ class StreamingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_wbstream_s").toString
     val landing = s"$dir/landing"
     Files.createDirectories(java.nio.file.Paths.get(landing))
-    // Same two-copies-in-one-micro-batch shape as the batched-parse test:
-    // the CDC lag-chain must span the file boundary so the second copy
-    // re-toggles against the first's last occurrences — now with ONE
-    // customers swap and ONE uploads append for the whole batch.
+    // Two copies of the SAME workbook in one micro-batch: the CDC
+    // lag-chain must span the file boundary so the second copy re-toggles
+    // against the first's last occurrences (4 then 8 change rows — the
+    // reference's non-idempotent repeat semantics) — with ONE customers
+    // swap and ONE uploads append for the whole batch.
     Files.copy(java.nio.file.Paths.get(sample),
       java.nio.file.Paths.get(s"$landing/a_Txn_Details.xlsx"))
     Files.copy(java.nio.file.Paths.get(sample),
