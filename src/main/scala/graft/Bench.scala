@@ -310,28 +310,19 @@ object Bench {
         // shared) and the same clearCache+GC reset the batch timer uses.
         // Methodology change, documented in OPTIMIZATION_r14.md with
         // the prior single-run numbers kept alongside.
-        def runIngest(tag: String,
-                      start: (SparkSession, String, String, String, String)
-                        => org.apache.spark.sql.streaming.StreamingQuery)
-            : Double =
-          (1 to 2).map { k =>
-            spark.catalog.clearCache()
-            System.gc()
-            graft.operators.Scratch.noteReclaim(spark)
-            val t0 = System.nanoTime()
-            val q = start(spark, landing.toString,
-              dir.resolve(s"state_${tag}_$k").toString,
-              dir.resolve(s"processed_${tag}_$k").toString,
-              dir.resolve(s"ckpt_${tag}_$k").toString)
-            q.processAllAvailable()
-            q.stop()
-            (System.nanoTime() - t0) / 1e9
-          }.min
-        val secSeq = runIngest("seq",
-          graft.streaming.StreamingPipeline.workbookStream(_, _, _, _, _))
-        val secSet = runIngest("set",
-          graft.streaming.StreamingPipeline
-            .workbookStreamSetBased(_, _, _, _, _))
+        val secSeq = (1 to 2).map { k =>
+          spark.catalog.clearCache()
+          System.gc()
+          graft.operators.Scratch.noteReclaim(spark)
+          val t0 = System.nanoTime()
+          val q = graft.streaming.StreamingPipeline.workbookStream(spark,
+            landing.toString, dir.resolve(s"state_$k").toString,
+            dir.resolve(s"processed_$k").toString,
+            dir.resolve(s"ckpt_$k").toString)
+          q.processAllAvailable()
+          q.stop()
+          (System.nanoTime() - t0) / 1e9
+        }.min
         // JSONL landing-stream throughput: the sf corpus exported as
         // JSON lines (doc_id%53 corruption planted) streamed through the
         // parsed/dead-letter split — the LLM-corpus twin of the workbook
@@ -342,7 +333,7 @@ object Bench {
         graft.sources.Jsonl.writeLines(
           graft.sources.Jsonl.renderLines(jDocs, corruptMod = 53), jLanding)
         val nDocs = jDocs.count()
-        // min-of-2, cold dirs per run (same contract as runIngest above)
+        // min-of-2, cold dirs per run (same contract as the workbook stream)
         val secJsonl = (1 to 2).map { k =>
           spark.catalog.clearCache()
           System.gc()
@@ -394,8 +385,6 @@ object Bench {
         }.min
         s""","stream":{"workbooks":$nWb,"tx_rows":$rows,"sec":$secSeq,""" +
           s""""rows_per_sec":${rows / secSeq}},""" +
-          s""""stream_set_based":{"workbooks":$nWb,"tx_rows":$rows,""" +
-          s""""sec":$secSet,"rows_per_sec":${rows / secSet}},""" +
           s""""stream_jsonl":{"docs":$nDocs,"sec":$secJsonl,""" +
           s""""docs_per_sec":${nDocs / secJsonl}},""" +
           s""""stream_jsonl_gated":{"docs":$nDocs,"sec":$secGated,""" +

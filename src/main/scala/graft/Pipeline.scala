@@ -3,8 +3,11 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.Relational
 import graft.sources.Xlsx
@@ -20,6 +23,15 @@ case class BatchResult(
     merged: DataFrame,       // 14-column joined detail
     nested: DataFrame,       // per-customer category detail (A4)
     nChanges: Long)          // address-change rows captured this batch
+
+/** One workbook parsed on the driver: its file name and the raw rows of
+  * the three required sheets (header row first, null = empty cell).
+  */
+private[graft] final case class ParsedUpload(
+    filename: String,
+    transactions: Vector[Vector[String]],
+    customers: Vector[Vector[String]],
+    products: Vector[Vector[String]])
 
 /** The end-to-end micro-batch pipeline — the Spark-native equivalent of
   * the reference's `upload_file` flow (/root/reference/app.py:58-182):
@@ -45,45 +57,103 @@ class Pipeline(spark: SparkSession, stateDir: String, processedDir: String,
   def allowedFile(filename: String): Boolean =
     filename.toLowerCase.endsWith(".xlsx")
 
-  /** Run one workbook as a micro-batch against persistent state.
+  /** Run one workbook as a micro-batch against persistent state: the
+    * one-file case of [[runUploads]].
     *
-    * @param timestamp one ISO timestamp per batch (app.py:78 — computed
-    *                  once, shared by all change rows; F9)
+    * @param timestamp the upload's ISO timestamp (app.py:78 — computed
+    *                  once, shared by all its change rows; F9)
     */
   def runBatch(workbookPath: String,
                timestamp: String = LocalDateTime.now().toString)
-      : BatchResult = {
-    val filename = Paths.get(workbookPath).getFileName.toString
-    require(allowedFile(filename), s"not an xlsx: $filename")
+      : BatchResult =
+    runUploads(Seq(workbookPath), Seq(timestamp)).head
 
-    // The workbook is parsed on the driver (bounded by Xlsx.MaxRows), so
-    // the sheet row counts and the header promotion read the held rows
-    // instead of running jobs over them.
-    val sheets = Xlsx.read(workbookPath).toMap
+  /** The upload engine: N workbooks as one micro-batch against
+    * persistent state, in the given order. Each workbook is parsed and
+    * checked on the driver first (S2/S3 — a failure throws before any
+    * state is touched), then ONE state application covers all N
+    * ([[graft.state.StateStore.applyUploads]], equal to applying them
+    * one after another), and each file renders its own export.
+    *
+    * @param timestamps one ISO timestamp per workbook, stamped on its
+    *                   uploads row and its change rows (F9)
+    */
+  def runUploads(paths: Seq[String], timestamps: Seq[String])
+      : Seq[BatchResult] =
+    runUploads(paths.map(parse), timestamps, _ => ())
+
+  /** S3 + S1 + S2 for one workbook, on the driver (bounded by
+    * `Xlsx.MaxRows`): the parsed sheets the rest of the upload reads,
+    * so row counts and header promotion run no jobs. Throws when the
+    * file is not an xlsx, cannot be read, or lacks a required sheet or
+    * a header row.
+    */
+  private[graft] def parse(path: String): ParsedUpload = {
+    val filename = Paths.get(path).getFileName.toString
+    require(allowedFile(filename), s"not an xlsx: $filename")
+    val sheets = Xlsx.read(path).toMap
     require(RequiredSheets.subsetOf(sheets.keySet),          // S2
       "File must contain Transactions, Customers, and Products sheets.")
     val Seq(tx, cust, prod) =
       Seq("Transactions", "Customers", "Products").map(sheets)
-    val (transactions, products) = (promoted(tx), promoted(prod))
-
-    // P1-P9: skip header row, parse packed records, keep file order.
-    val parsed = Relational.parseCustomers(
-        Xlsx.toFrame(spark, cust).where(col("_row_idx") > 0), "_c0",
-        passthrough = Seq("_row_idx"))
-    // A5 + S6 + J3 + S7 + S8: per-sheet data row counts (minus header),
-    // dense upload id, CDC capture + last-wins upsert.
-    val Seq((uploadId, nChanges)) = store.applyUploads(
-      Seq((filename, tx.length - 1L, cust.length - 1L, prod.length - 1L)),
-      parsed.withColumn("_upload_seq", lit(0)), timestamp)
-    renderBatch(parsed, transactions, products, uploadId, nChanges)
+    require(tx.nonEmpty && cust.nonEmpty && prod.nonEmpty,
+      "Transactions, Customers and Products sheets need a header row.")
+    ParsedUpload(filename, tx, cust, prod)
   }
 
-  /** P10-P11 on a sheet's driver-held rows: the same relation as
-    * `Relational.promoteHeader(Xlsx.toFrame(spark, rows))`, with the
-    * names read from the first held row instead of by two jobs.
+  /** [[runUploads]] on workbooks already parsed by [[parse]] — the entry
+    * of the landing streams, which parse first so that one bad file is
+    * rejected alone. `applied` runs once the state application has
+    * committed and before any render: the streams record their ledger
+    * there, so a crash replays state only in that gap.
     */
-  private def promoted(rows: Vector[Vector[String]]): DataFrame = {
-    require(rows.nonEmpty, "sheet has no header row")
+  private[graft] def runUploads(books: Seq[ParsedUpload],
+                                timestamps: Seq[String],
+                                applied: Seq[Long] => Unit)
+      : Seq[BatchResult] = {
+    require(books.nonEmpty && books.size == timestamps.size,
+      "one timestamp per workbook")
+    // A5 + S6 + J3 + S7 + S8: per-sheet data row counts (minus header),
+    // dense upload ids, CDC capture + last-wins upsert, for all files.
+    val applications = store.applyUploads(
+      books.zip(timestamps).map { case (b, ts) =>
+        (b.filename, ts, b.transactions.length - 1L,
+          b.customers.length - 1L, b.products.length - 1L) },
+      parsedCustomers(customerLines(books), Seq("_upload_seq", "_row_idx")))
+    applied(applications.map(_._1))
+    books.lazyZip(applications).map { case (b, (uploadId, nChanges)) =>
+      renderBatch(parsedCustomers(customerLines(Seq(b)), Seq("_row_idx")),
+        promoted(b.transactions), promoted(b.products), uploadId, nChanges)
+    }
+  }
+
+  /** P1-P9: skip each sheet's header row, parse the packed records, keep
+    * file order.
+    */
+  private def parsedCustomers(lines: DataFrame, keep: Seq[String])
+      : DataFrame =
+    Relational.parseCustomers(lines.where(col("_row_idx") > 0), "_c0",
+      passthrough = keep)
+
+  /** Every workbook's Customers column as ONE local frame of
+    * (`_upload_seq`, `_row_idx`, `_c0`), so the state plan has the same
+    * shape for any number of files. The schema is fixed: a sheet whose
+    * rows hold no cell still has a `_c0` column (all null).
+    */
+  private def customerLines(books: Seq[ParsedUpload]): DataFrame =
+    spark.createDataFrame(
+      books.zipWithIndex.flatMap { case (b, i) =>
+        b.customers.zipWithIndex.map { case (r, idx) =>
+          Row(i, idx.toLong, r.headOption.orNull) }
+      }.asJava,
+      StructType(Seq(StructField("_upload_seq", IntegerType, nullable = false),
+        StructField("_row_idx", LongType, nullable = false),
+        StructField("_c0", StringType))))
+
+  /** P10-P11 on a sheet's driver-held rows: the first row names the
+    * columns (lowercased; an empty cell gives `_c$i`), the rest are data.
+    */
+  private[graft] def promoted(rows: Vector[Vector[String]]): DataFrame = {
     val df = Xlsx.toFrame(spark, rows)
     df.where(col("_row_idx") > 0).select(
       df.columns.toSeq.tail.zipWithIndex.map { case (c, i) =>
@@ -93,16 +163,14 @@ class Pipeline(spark: SparkSession, stateDir: String, processedDir: String,
 
   /** The stateless tail of a micro-batch — joins, aggregates, ranked
     * outputs, xlsx export — for a file whose STATE effects (upload
-    * metadata, CDC, upsert) were already applied, possibly as part of a
-    * whole-micro-batch set-based application
-    * ([[graft.state.StateStore.applyUploads]]).
+    * metadata, CDC, upsert) were already applied by [[runUploads]].
     *
     * @param transactions header-promoted sheet carrying `_row_idx`
     * @param products header-promoted sheet carrying `_row_idx`
     */
-  private[graft] def renderBatch(parsed: DataFrame, transactions: DataFrame,
-                                 products: DataFrame, uploadId: Long,
-                                 nChanges: Long): BatchResult = {
+  private def renderBatch(parsed: DataFrame, transactions: DataFrame,
+                          products: DataFrame, uploadId: Long,
+                          nChanges: Long): BatchResult = {
     // The batch's own (possibly duplicated) customer view joins the
     // analytics — not the deduped state table (app.py:132 uses the
     // parsed frame; SURVEY.md §7.4.2).

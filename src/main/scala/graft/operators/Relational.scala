@@ -52,28 +52,12 @@ object Relational {
         col("_parts").getItem(i).as(f) }: _*)
   }
 
-  /** Header promotion + lowercase, P10-P11 (app.py:126-129): row with the
-    * minimum `idxCol` becomes the column names; remaining rows are data.
-    * The single-row `head()` is the only driver-side step (same work the
-    * reference does; the data itself never leaves executors).
+  /** P10-P11 naming rule for header cell `i` (app.py:126-129): lowercased,
+    * or `_c$i` when the cell is empty. The workbook's first row is promoted
+    * on the driver, where [[graft.Pipeline]] holds the parsed sheet.
     */
-  def promoteHeader(df: DataFrame, idxCol: String = "_row_idx"): DataFrame = {
-    val dataCols = df.columns.filter(_ != idxCol)
-    val hdr = df.orderBy(col(idxCol)).select(dataCols.toSeq.map(col): _*).head()
-    val names = dataCols.indices.map(i => headerName(hdr.get(i), i))
-    val minIdx = df.agg(min(col(idxCol))).head().getLong(0)
-    df.where(col(idxCol) =!= minIdx)
-      .select(dataCols.toSeq.zip(names).map { case (c, n) =>
-        col(c).as(n) } :+ col(idxCol): _*)
-  }
-
-  /** P11 naming rule for header cell `i`: lowercased, or `_c$i` when the
-    * cell is empty. Shared by [[promoteHeader]] and the driver-side
-    * promotion of an already-parsed workbook sheet in
-    * [[graft.Pipeline.runBatch]].
-    */
-  def headerName(cell: Any, i: Int): String =
-    Option(cell).map(_.toString.toLowerCase).getOrElse(s"_c$i")
+  def headerName(cell: String, i: Int): String =
+    Option(cell).map(_.toLowerCase).getOrElse(s"_c$i")
 
   /** J1 + J2 (app.py:131-132): transactions ⋈ products (m:1 — the dim is
     * tiny, so it is broadcast: no shuffle of the fact table), then

@@ -9,7 +9,6 @@ import scala.collection.mutable
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, get, lit, max, size}
 import org.apache.spark.sql.types._
 
 /** Dependency-free xlsx reader/writer (S1/S12 — the reference's only I/O
@@ -17,10 +16,10 @@ import org.apache.spark.sql.types._
   * XML parts; this parses them with the JDK's StAX — no external library,
   * per the offline-build constraint (build.sbt).
   *
-  * Deliberately driver-side, like the reference (one workbook per
-  * micro-batch, bounded by [[Xlsx.MaxRows]]): a workbook is the *batch
-  * envelope*, not the big-data store — the heavy lifting happens after
-  * `toDataFrame`. At 100 TB the landing format would be parquet and this
+  * Deliberately driver-side, like the reference (each workbook bounded
+  * by [[Xlsx.MaxRows]], a bounded number per micro-batch): a workbook is
+  * the *batch envelope*, not the big-data store — the heavy lifting
+  * happens after [[toFrame]]. At 100 TB the landing format would be parquet and this
   * module is bypassed entirely; the writer guards its `collect()` and
   * documents sheet-sharding as the scale path.
   *
@@ -35,8 +34,7 @@ object Xlsx {
 
   /** Read all sheets (or just `wanted`): name → dense row-major cells
     * (null = empty cell), in workbook sheet order. Restricting to one
-    * sheet skips the XML parse of every other worksheet — what the
-    * distributed many-workbook scan wants.
+    * sheet skips the XML parse of every other worksheet.
     */
   def read(path: String, wanted: Option[String] = None)
       : Seq[(String, Vector[Vector[String]])] = {
@@ -67,13 +65,8 @@ object Xlsx {
     } finally zip.close()
   }
 
-  /** Read as DataFrames, one [[toFrame]] per sheet. */
-  def readSheets(spark: SparkSession, path: String): Map[String, DataFrame] =
-    read(path).map { case (name, rows) => name -> toFrame(spark, rows) }.toMap
-
   /** One parsed sheet as a local frame: `_row_idx` (0-based sheet row) +
-    * `_c0.._cN` string columns — the shape
-    * [[graft.operators.Relational.promoteHeader]] consumes.
+    * `_c0.._cN` string columns — the shape [[graft.Pipeline]] promotes.
     */
   def toFrame(spark: SparkSession, rows: Vector[Vector[String]]): DataFrame = {
     val width = if (rows.isEmpty) 0 else rows.map(_.length).max
@@ -86,86 +79,6 @@ object Xlsx {
         if (j < r.length) r(j) else null)))
     }
     spark.createDataFrame(data, schema)
-  }
-
-  /** Distributed multi-workbook scan — the S1 scale path when the landing
-    * zone holds MANY workbooks rather than one big one (each workbook is
-    * already bounded by Excel's own [[MaxRows]]): the file list is
-    * distributed and each executor parses its workbooks locally with the
-    * same StAX codec, so ingest parallelism scales with file count and
-    * nothing but the path list touches the driver. Paths must be visible
-    * from executors (shared/distributed filesystem — true wherever a real
-    * cluster would land uploads).
-    *
-    * Output: `_source` (path), `_row_idx` within its workbook, and
-    * `_c0.._c{width-1}` raw strings — the same shape `promoteHeader`
-    * consumes, plus provenance.
-    *
-    * Deliberately lenient: a workbook missing `sheet` contributes zero
-    * rows rather than failing the whole many-file scan (XlsxSpec pins
-    * this); validate sheet names upstream if absence means
-    * misconfiguration rather than heterogeneity.
-    */
-  def readSheetAcrossWorkbooks(spark: SparkSession, paths: Seq[String],
-                               sheet: String, width: Int): DataFrame = {
-    val schema = StructType(
-      StructField("_source", StringType, nullable = false) +:
-      StructField("_row_idx", LongType, nullable = false) +:
-      (0 until width).map(i => StructField(s"_c$i", StringType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    import spark.implicits._
-    spark.createDataset(paths)
-      .repartition(math.max(1, math.min(paths.size, 64)))
-      .mapPartitions { it =>
-        it.flatMap { p =>
-          read(p, wanted = Some(sheet)).headOption.map(_._2)
-            .getOrElse(Vector.empty)
-            .zipWithIndex.map { case (r, i) =>
-              Row.fromSeq(p +: (i.toLong +: (0 until width).map(j =>
-                if (j < r.length) r(j) else null)))
-            }
-        }
-      }(enc)
-  }
-
-  /** One-pass auto-width twin of [[readSheetAcrossWorkbooks]]: parses
-    * each workbook's sheet ONCE into a persisted variable-width cells
-    * frame, derives the batch-wide sheet width from those SAME parsed
-    * rows (max cell count — so the ADVICE-r7 "a later, wider workbook
-    * must widen the scan" guarantee holds by construction, no separate
-    * probe parse), then projects the array into `_c0.._cN` columns.
-    * The previous two-pass shape (a distributed per-(path, sheet)
-    * width probe followed by a second full `readSheetAcrossWorkbooks`
-    * parse) read every workbook twice per micro-batch and halved
-    * landing-stream throughput.
-    *
-    * Returns the projected frame and a cleanup thunk that releases the
-    * cached parse — call it when the batch is done with the sheet.
-    */
-  def readSheetAcrossWorkbooksAuto(spark: SparkSession, paths: Seq[String],
-                                   sheet: String)
-      : (DataFrame, () => Unit) = {
-    import spark.implicits._
-    val raw = spark.createDataset(paths)
-      .repartition(math.max(1, math.min(paths.size, 64)))
-      .flatMap { p =>
-        read(p, wanted = Some(sheet)).headOption.map(_._2)
-          .getOrElse(Vector.empty)
-          .zipWithIndex.map { case (r, i) => (p, i.toLong, r) }
-      }
-      .toDF("_source", "_row_idx", "_cells")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Materializes the parse into the cache; every later projection —
-    // including the per-file filters the caller runs — reads the cache.
-    val width = math.max(1, raw
-      .agg(coalesce(max(size(col("_cells"))), lit(0))).head().getInt(0))
-    val out = raw.select(
-      col("_source") +: col("_row_idx") +:
-        // get() (not getItem): a narrower workbook's short row must pad
-        // with nulls, not throw under ANSI array-index semantics.
-        (0 until width).map(j =>
-          get(col("_cells"), lit(j)).as(s"_c$j")): _*)
-    (out, () => { raw.unpersist(blocking = false); () })
   }
 
   /** Write DataFrames as one xlsx, one sheet each, headers from column
@@ -267,9 +180,8 @@ object Xlsx {
     * returned (sorted) paths to preserve partition order.
     *
     * A shard missing the wanted sheet (or its header) fails the merge
-    * loudly — unlike [[readSheetAcrossWorkbooks]]'s deliberate leniency,
-    * a merge that silently dropped a shard's rows would hand back a
-    * short deliverable with no signal. Cell typing: [[read]] surfaces
+    * loudly: a merge that silently dropped a shard's rows would hand
+    * back a short deliverable with no signal. Cell typing: [[read]] surfaces
     * every cell as a raw string (the module-wide contract), so merged
     * cells re-encode as string-typed — identical values, but numeric
     * cells from the shards become text cells in the merged file; run

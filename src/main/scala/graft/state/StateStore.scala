@@ -75,15 +75,17 @@ class StateStore(spark: SparkSession, dir: String,
       : Seq[Long] = {
     val base = uploads.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
     val ids = metas.indices.map(base + _ + 1L)
-    appendUploads(metas.zip(ids).map { case ((fn, ts, t, c, p), id) =>
-      Row(id, fn, ts, t, c, p) })
+    appendUploads(metas, ids)
     ids
   }
 
-  private def appendUploads(rows: Seq[Row]): Unit =
-    if (rows.nonEmpty)
+  private def appendUploads(metas: Seq[(String, String, Long, Long, Long)],
+                            ids: Seq[Long]): Unit =
+    if (metas.nonEmpty)
       backend.append("uploads", spark.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
+        scala.jdk.CollectionConverters.SeqHasAsJava(
+          metas.zip(ids).map { case ((fn, ts, t, c, p), id) =>
+            Row(id, fn, ts, t, c, p) }).asJava,
         Tables.uploadsSchema))
 
   /** Content-digest ingest ledger (idempotent re-ingest twin — see
@@ -92,18 +94,10 @@ class StateStore(spark: SparkSession, dir: String,
   def uploadDigests: DataFrame =
     backend.read("upload_digests", Tables.uploadDigestsSchema)
 
-  /** Records one ingested workbook's content digest. Appended AFTER the
-    * batch's state effects commit, so a crash between the two replays
-    * the batch (at-least-once) rather than silently dropping it.
-    */
-  def recordUploadDigest(digest: String, uploadId: Long,
-                         filename: String, timestamp: String): Unit =
-    backend.append("upload_digests", spark.createDataFrame(
-      java.util.List.of(Row(digest, uploadId, filename, timestamp)),
-      Tables.uploadDigestsSchema))
-
-  /** Batched [[recordUploadDigest]]: ONE backend append for a whole
-    * micro-batch's survivor digests. The single write is what makes the
+  /** Records a micro-batch's ingested content digests in ONE backend
+    * append, AFTER the batch's state effects commit, so a crash between
+    * the two replays the batch (at-least-once) rather than silently
+    * dropping it. The single write is what makes the
     * digest-gated landing's at-least-once claim hold: the landing sink
     * overwrites its per-batch dir on replay, so a per-file digest loop
     * that crashes midway would anti-join out the recorded files on
@@ -133,9 +127,10 @@ class StateStore(spark: SparkSession, dir: String,
   /** One state application for N uploads (S6 + J3 + S7 + S8,
     * app.py:86-123): allocates the uploads' dense ids, captures their
     * address changes, upserts the customers and only then appends the
-    * N upload rows. The per-file [[graft.Pipeline.runBatch]] calls it
-    * with one file, the set-based landing stream with a micro-batch's
-    * files, so both share the CDC plan of [[applyBatch]].
+    * N upload rows. [[graft.Pipeline.runUploads]] calls it once per
+    * micro-batch. Each file's uploads row and change rows carry that
+    * file's own timestamp, so the N-file application equals applying
+    * the files one after another.
     *
     * Because the upload rows commit last, a crash anywhere before them
     * leaves no upload row for the attempt, and the at-least-once replay
@@ -146,17 +141,17 @@ class StateStore(spark: SparkSession, dir: String,
     * state; cross-table atomicity beyond this needs a transactional
     * table format (a [[StateBackend]] drop-in).
     *
-    * @param files (filename, txRows, custRows, prodRows) in file order
+    * @param files (filename, timestamp, txRows, custRows, prodRows) in
+    *              file order
     * @param batch parsed customer rows carrying `_upload_seq` (0-based
     *              index into `files`) and `_row_idx`
     * @return (upload id, change-row count) per file, in file order
     */
-  def applyUploads(files: Seq[(String, Long, Long, Long)],
-                   batch: DataFrame, timestamp: String): Seq[(Long, Long)] = {
-    val (ids, changes) = applyBatch(batch, timestamp,
+  def applyUploads(files: Seq[(String, String, Long, Long, Long)],
+                   batch: DataFrame): Seq[(Long, Long)] = {
+    val (ids, changes) = applyBatch(batch, files.map(_._2),
       maxUpload => files.indices.map(maxUpload + _ + 1L))
-    appendUploads(files.zip(ids).map { case ((fn, t, c, p), id) =>
-      Row(id, fn, timestamp, t, c, p) })
+    appendUploads(files, ids)
     ids.map(id => id -> changes(id))
   }
 
@@ -181,7 +176,7 @@ class StateStore(spark: SparkSession, dir: String,
     */
   def applyCustomerBatchMulti(batch: DataFrame, timestamp: String,
                               uploadIds: Seq[Long]): Map[Long, Long] =
-    applyBatch(batch, timestamp, _ => uploadIds)._2
+    applyBatch(batch, uploadIds.map(_ => timestamp), _ => uploadIds)._2
 
   /** CDC against *mutating intra-batch state* plus last-writer-wins
     * upsert, set-based, across N files concatenated in file order.
@@ -198,7 +193,8 @@ class StateStore(spark: SparkSession, dir: String,
     * changes then 8 per repeat on the reference sample — deliberately
     * non-idempotent, SURVEY.md §7.4.3). The same window marks each
     * customer's last occurrence (`lead IS NULL`), the upsert winner,
-    * which carries its own file's upload id.
+    * which carries its own file's upload id; each change row carries
+    * its own file's timestamp.
     *
     * That window frame is the only batch-sized materialization: it is
     * persisted for the call, and the change count, the change append
@@ -211,7 +207,7 @@ class StateStore(spark: SparkSession, dir: String,
     *
     * @return the upload ids and the change-row count per upload id
     */
-  private def applyBatch(batch: DataFrame, timestamp: String,
+  private def applyBatch(batch: DataFrame, timestamps: Seq[String],
                          uploadIdsFor: Long => Seq[Long])
       : (Seq[Long], Map[Long, Long]) = {
     val noId = lit(null).cast("long")
@@ -221,7 +217,8 @@ class StateStore(spark: SparkSession, dir: String,
       .select(Seq("u", "c", "cu").map(c => coalesce(max(c), lit(0L))): _*)
       .head()
     val uploadIds = uploadIdsFor(maxes.getLong(0))
-    require(uploadIds.nonEmpty, "applyBatch: no uploads")
+    require(uploadIds.nonEmpty && uploadIds.size == timestamps.size,
+      "applyBatch: one timestamp per upload")
     val maxChangeId =
       if (maxes.getLong(2) < uploadIds.min) maxes.getLong(1)
       else {
@@ -230,8 +227,8 @@ class StateStore(spark: SparkSession, dir: String,
         addressChanges.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
       }
 
-    val idForSeq = element_at(
-      array(uploadIds.map(lit): _*), col("_upload_seq") + 1).cast("long")
+    def bySeq(values: Seq[Any]) =
+      element_at(array(values.map(lit): _*), col("_upload_seq") + 1)
     val occ = Window.partitionBy("customer_id")
       .orderBy("_upload_seq", "_row_idx")
     val stored = customers.select(col("customer_id"),
@@ -241,7 +238,7 @@ class StateStore(spark: SparkSession, dir: String,
       .withColumn("_old",
         coalesce(lag("address", 1).over(occ), col("_stored_address")))
       .withColumn("_last", lead("_row_idx", 1).over(occ).isNull)
-      .withColumn("upload_id", idForSeq)
+      .withColumn("upload_id", bySeq(uploadIds).cast("long"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // The change rows are a batch's trickle: as one partition, the
@@ -257,7 +254,7 @@ class StateStore(spark: SparkSession, dir: String,
             Window.orderBy("_upload_seq", "_row_idx"))).cast("long"))
           .select(col("id"), col("customer_id"),
             col("_old").as("old_address"), col("address").as("new_address"),
-            lit(timestamp).as("change_timestamp"), col("upload_id")))
+            bySeq(timestamps).as("change_timestamp"), col("upload_id")))
 
       val lastWins = occurrences.where(col("_last"))
         .select("customer_id", "name", "email", "dob", "address",

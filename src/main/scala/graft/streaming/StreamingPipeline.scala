@@ -1,11 +1,17 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.time.LocalDateTime
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
-import graft.Pipeline
+import graft.{ParsedUpload, Pipeline}
 
 /** Streaming mode (SURVEY.md §2.8): the reference's upload loop *is* a
   * micro-batch stream — each workbook is one batch against persistent
@@ -16,13 +22,26 @@ import graft.Pipeline
   *     windows — the incremental form of
   *     [[graft.operators.EventOps.tumblingCounts]] (same plan shape;
   *     state store bounded by the watermark).
-  *  2. [[workbookStream]]: a file source over a landing directory of
-  *     workbooks, with `foreachBatch` driving the stateful
-  *     [[graft.Pipeline]] per file — upsert + CDC exactly as in batch
-  *     mode (state lives in parquet tables, queryable at rest, so
-  *     `mapGroupsWithState` is deliberately not used — SURVEY.md §2.8).
+  *  2. [[workbookStream]] / [[workbookStreamIdempotent]]: a file source
+  *     over a landing directory of workbooks, with `foreachBatch`
+  *     running each micro-batch's workbooks through ONE
+  *     [[graft.Pipeline.runUploads]] — upsert + CDC exactly as in batch
+  *     mode, one state application per micro-batch (state lives in
+  *     parquet tables, queryable at rest, so `mapGroupsWithState` is
+  *     deliberately not used — SURVEY.md §2.8).
+  *     A workbook that fails its parse or sheet checks is logged and
+  *     left out; the rest of the micro-batch lands and the stream keeps
+  *     serving.
   */
 object StreamingPipeline {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Files per micro-batch of the file-source streams: bounds what one
+    * trigger reads (for the workbook streams, the parsed workbooks the
+    * driver holds at once).
+    */
+  private val MaxFilesPerTrigger = 16
 
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", TimestampType),
@@ -33,7 +52,7 @@ object StreamingPipeline {
   def eventStream(spark: SparkSession, sourceDir: String): DataFrame =
     spark.readStream
       .schema(eventSchema)
-      .option("maxFilesPerTrigger", 16)   // bounded per micro-batch
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
       .parquet(sourceDir)
 
   /** Watermarked tumbling-window aggregate — works on both streaming and
@@ -246,12 +265,6 @@ object StreamingPipeline {
     }
   }
 
-  // The former two-pass width probe (a separate distributed parse per
-  // (path × sheet) before the real scan) is gone: widths now derive
-  // inside [[graft.sources.Xlsx.readSheetAcrossWorkbooksAuto]] from the
-  // same cached parse the scan projects, keeping the ADVICE-r7
-  // every-workbook-widens guarantee at half the parse cost.
-
   /** Streaming NEAR-duplicate votes: the online form of
     * [[graft.operators.Dedup.simhashPairs]]' banded search. Each incoming
     * document gets a per-row 64-bit SimHash ([[graft.operators
@@ -334,60 +347,104 @@ object StreamingPipeline {
       .toDF("doc_id", "is_dup_vote")
   }
 
+  /** The binaryFile landing scan of the file-landing streams: every file
+    * under `landingDir` matching `glob` (S3 for workbooks — the glob is
+    * case-insensitive like the batch path's extension check), at most
+    * `maxFilesPerTrigger` files per micro-batch when given.
+    */
+  private def landedFiles(spark: SparkSession, landingDir: String,
+                          glob: String, maxFilesPerTrigger: Option[Int])
+      : DataFrame = {
+    val reader = spark.readStream
+      .format("binaryFile")
+      .option("pathGlobFilter", glob)
+      .schema(StructType(Seq(
+        StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType),
+        StructField("content", BinaryType))))
+    maxFilesPerTrigger.fold(reader)(reader.option("maxFilesPerTrigger", _))
+      .load(landingDir)
+  }
+
+  private def landedWorkbooks(spark: SparkSession, landingDir: String)
+      : DataFrame =
+    landedFiles(spark, landingDir, "*.[xX][lL][sS][xX]",
+      Some(MaxFilesPerTrigger))
+
+  /** Parses and checks each landed workbook on the driver
+    * ([[graft.Pipeline.parse]]), in the given order. A file that fails —
+    * not a readable workbook, a required sheet or header row missing —
+    * is logged with its reason and left out: the reference rejects that
+    * one upload and keeps serving (app.py:68-71), where a throw out of
+    * `foreachBatch` would end the query and fail every restart on the
+    * same file.
+    */
+  private def parseLanded(pipeline: Pipeline, raws: Seq[String])
+      : Seq[(String, ParsedUpload)] =
+    raws.flatMap { raw =>
+      Try(pipeline.parse(raw.stripPrefix("file:"))) match {
+        case Success(book) => Some(raw -> book)
+        case Failure(e) =>
+          log.warn(s"rejected upload $raw: ${e.getMessage}")
+          None
+      }
+    }
+
   /** The reference's upload flow as a stream: watch a landing directory
-    * for workbooks, run each through the stateful batch pipeline.
+    * for workbooks (at most 16 per micro-batch), parse and check them
+    * all, then run the good ones, in path order, through ONE
+    * [[graft.Pipeline.runUploads]] — one state application for the whole
+    * micro-batch, one export per file. Each file is stamped with its own
+    * `LocalDateTime.now()`, taken in path order, so the audit order
+    * `timestamp DESC, id DESC` stays id order.
     *
     * Delivery: `foreachBatch` is at-least-once (a failed micro-batch
-    * replays whole), and runBatch is deliberately non-idempotent
-    * (reference semantics) — so a per-file ledger narrows any replay to
-    * the single file that was in flight at the crash: completed files
-    * are skipped on the retried batch. The ledger lives INSIDE the
-    * checkpoint directory, sharing its lifecycle: deleting the
-    * checkpoint to reprocess the landing dir resets the ledger with it.
-    * The glob is case-insensitive like the batch path's extension check.
+    * replays whole), and an upload is deliberately non-idempotent
+    * (reference semantics), so a path ledger records every file the
+    * stream has taken, landed or rejected, in ONE append right after the
+    * micro-batch's state application commits and before its renders. A
+    * replayed batch skips the recorded files; a crash double-applies
+    * state only between the uploads append and the ledger append, and a
+    * crash during rendering loses that micro-batch's exports (the
+    * reference's DB writes, app.py:109-123, also precede its export,
+    * app.py:155-167).
+    * The ledger lives INSIDE the checkpoint directory, sharing its
+    * lifecycle: deleting the checkpoint to reprocess the landing dir
+    * resets the ledger with it. Workbooks must land by atomic rename: a
+    * file is read as soon as it is listed, and a half-written one is
+    * rejected like any malformed workbook.
     */
   def workbookStream(spark: SparkSession, landingDir: String,
                      stateDir: String, processedDir: String,
                      checkpointDir: String,
                      shardThreshold: Long =
                        graft.sources.Xlsx.DefaultShardThreshold)
-      : StreamingQuery = {
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.[xX][lL][sS][xX]")  // S3: ext filter
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(landingDir)
-      .select("path", "modificationTime")
-    files.writeStream
+      : StreamingQuery =
+    landedWorkbooks(spark, landingDir).select("path").writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val pipeline =
           new Pipeline(spark, stateDir, processedDir, shardThreshold)
-        val ledger =
-          java.nio.file.Paths.get(checkpointDir, "processed_paths.txt")
+        val ledger = Paths.get(checkpointDir, "processed_paths.txt")
         val done: Set[String] =
-          if (java.nio.file.Files.exists(ledger))
-            scala.jdk.CollectionConverters.ListHasAsScala(
-              java.nio.file.Files.readAllLines(ledger)).asScala.toSet
+          if (Files.exists(ledger)) Files.readAllLines(ledger).asScala.toSet
           else Set.empty
         // Path order, sorted on the driver: the listing is one
         // micro-batch's file names, so a distributed sort only adds jobs.
-        val raws = batch.select("path").collect().map(_.getString(0)).sorted
-        raws.foreach { raw =>
-          if (!done.contains(raw)) {
-            pipeline.runBatch(raw.stripPrefix("file:"))
-            java.nio.file.Files.writeString(ledger, raw + "\n",
-              java.nio.file.StandardOpenOption.CREATE,
-              java.nio.file.StandardOpenOption.APPEND)
-          }
-        }
+        val raws = batch.select("path").collect().map(_.getString(0))
+          .sorted.filterNot(done).toSeq
+        def record(paths: Seq[String]): Unit =
+          if (paths.nonEmpty)
+            Files.writeString(ledger, paths.map(_ + "\n").mkString,
+              StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        val books = parseLanded(pipeline, raws).map(_._2)
+        if (books.isEmpty) record(raws)  // all rejected: no state to apply
+        else pipeline.runUploads(books,
+          books.map(_ => LocalDateTime.now().toString), _ => record(raws))
+        ()
       }
       .start()
-  }
 
   /** Idempotent re-ingest twin of [[workbookStream]] — the production
     * landing contract the reference deliberately lacks. The reference
@@ -402,14 +459,18 @@ object StreamingPipeline {
     * set-based against the persistent `upload_digests` state ledger (the
     * S9 point-lookup→set-join rule applied to S6's metadata — the
     * incrementalDedup pattern on ingest), in-batch duplicates collapse
-    * to their first path in path order, and only surviving files run the
-    * batch pipeline. Each survivor's digest is recorded AFTER its state
-    * effects commit: a crash between the two replays the file
-    * (at-least-once into an idempotent gate) rather than dropping it.
-    * A path ledger is unnecessary — a checkpoint-replayed path carries
-    * identical bytes, so the digest gate subsumes it — and a CHANGED
-    * file at a previously seen path correctly re-ingests (new digest),
-    * which the path ledger got wrong.
+    * to their first path in path order, and the surviving files run
+    * through ONE [[graft.Pipeline.runUploads]], as in [[workbookStream]].
+    * Their digests are recorded in ONE append
+    * ([[graft.state.StateStore.recordUploadDigests]]) right after the
+    * state application commits and before the renders: a crash before it
+    * replays the files (at-least-once into an idempotent gate) rather
+    * than dropping them.
+    * A survivor that fails its parse or sheet checks is logged and gets
+    * no digest. A path ledger is unnecessary — a checkpoint-replayed
+    * path carries identical bytes, so the digest gate subsumes it — and
+    * a CHANGED file at a previously seen path correctly re-ingests (new
+    * digest), which the path ledger got wrong.
     *
     * The driver collects only (path, digest) pairs for one micro-batch's
     * surviving files — the same bounded listing envelope as
@@ -426,189 +487,38 @@ object StreamingPipeline {
                                shardThreshold: Long =
                                  graft.sources.Xlsx.DefaultShardThreshold,
                                timestampFor: String => String = _ =>
-                                 java.time.LocalDateTime.now().toString)
-      : StreamingQuery = {
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.[xX][lL][sS][xX]")  // S3: ext filter
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(landingDir)
+                                 LocalDateTime.now().toString)
+      : StreamingQuery =
+    landedWorkbooks(spark, landingDir)
       .select(col("path"), md5(col("content")).as("digest"))
-    files.writeStream
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val pipeline =
           new Pipeline(spark, stateDir, processedDir, shardThreshold)
-        val fresh = batch
+        val seenInBatch = scala.collection.mutable.HashSet.empty[String]
+        val survivors = batch
           .join(pipeline.store.uploadDigests.select("digest"),
             Seq("digest"), "left_anti")
-          .select("path", "digest").orderBy("path")
+          .select("path", "digest")
           .collect() // bounded: one micro-batch's file listing
-        val seenInBatch = scala.collection.mutable.HashSet.empty[String]
-        fresh.foreach { r =>
-          val (raw, dg) = (r.getString(0), r.getString(1))
-          if (seenInBatch.add(dg)) {
-            val fn = java.nio.file.Paths.get(
-              raw.stripPrefix("file:")).getFileName.toString
-            val ts = timestampFor(fn)
-            val res = pipeline.runBatch(raw.stripPrefix("file:"), ts)
-            pipeline.store.recordUploadDigest(dg, res.uploadId, fn, ts)
-          }
+          .map(r => r.getString(0) -> r.getString(1))
+          .sortBy(_._1)
+          .filter { case (_, dg) => seenInBatch.add(dg) }
+        val digestOf = survivors.toMap
+        val books = parseLanded(pipeline, survivors.map(_._1).toSeq)
+        if (books.nonEmpty) {
+          val stamps = books.map { case (_, b) => timestampFor(b.filename) }
+          pipeline.runUploads(books.map(_._2), stamps, ids =>
+            pipeline.store.recordUploadDigests(
+              books.lazyZip(stamps).lazyZip(ids).map {
+                case ((raw, b), ts, id) => (digestOf(raw), id, b.filename, ts)
+              }))
         }
+        ()
       }
       .start()
-  }
 
-  /** The fully set-based landing stream: ONE distributed parse per sheet
-    * across the micro-batch's workbooks (executors parse workbooks in
-    * parallel, `_source` carries provenance) **and ONE state application
-    * per micro-batch** — the CDC lag-chain ordered by (file, row) across
-    * the whole batch, one customers swap, then upload metadata for all N
-    * files appended in one write
-    * ([[graft.state.StateStore.applyUploads]], provably equivalent to
-    * the sequential per-file fold). The remaining per-file work is the
-    * stateless render/export tail, which reads only its own file's rows.
-    * This removes the N-swap serialization of the per-file
-    * [[workbookStream]] (Bench reports both).
-    *
-    * Semantics deltas vs the sequential forms, both inherent to batch
-    * application and documented here as the contract:
-    *  - all files in a micro-batch share one batch timestamp (the
-    *    reference stamps per upload; change ordering is still total via
-    *    dense ids);
-    *  - S2 validation is up-front for the whole batch: one malformed
-    *    workbook fails the micro-batch before ANY state is touched
-    *    (the sequential form would commit the files sorted before it).
-    *    At-least-once replay then retries the whole batch.
-    *
-    * Width safety (ADVICE r7): sheet widths derive from EVERY workbook
-    * in the batch — the one-pass
-    * [[graft.sources.Xlsx.readSheetAcrossWorkbooksAuto]] scan takes the
-    * max cell count over the same cached parse it projects, so a later,
-    * wider workbook widens the scan by construction.
-    */
-  def workbookStreamSetBased(spark: SparkSession, landingDir: String,
-                             stateDir: String, processedDir: String,
-                             checkpointDir: String,
-                             shardThreshold: Long =
-                               graft.sources.Xlsx.DefaultShardThreshold)
-      : StreamingQuery = {
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.[xX][lL][sS][xX]")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(landingDir)
-      .select("path", "modificationTime")
-    val sheetsWanted = Seq("Transactions", "Customers", "Products")
-    files.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pipeline =
-          new Pipeline(spark, stateDir, processedDir, shardThreshold)
-        val ledger =
-          java.nio.file.Paths.get(checkpointDir, "processed_paths.txt")
-        val done: Set[String] =
-          if (java.nio.file.Files.exists(ledger))
-            scala.jdk.CollectionConverters.ListHasAsScala(
-              java.nio.file.Files.readAllLines(ledger)).asScala.toSet
-          else Set.empty
-        val raws = batch.select("path").collect().map(_.getString(0))
-          .sorted.filterNot(done.contains)
-        if (raws.nonEmpty) {
-          val paths = raws.map(_.stripPrefix("file:")).toSeq
-          // ONE distributed scan per sheet; widths derive from the same
-          // parsed rows (ADVICE r7 guarantee without a second parse).
-          val parsedAuto = sheetsWanted.map { s =>
-            s -> graft.sources.Xlsx
-              .readSheetAcrossWorkbooksAuto(spark, paths, s)
-          }.toMap
-          val parsed = parsedAuto.view.mapValues(_._1).toMap
-          try {
-            // Per-file data row counts (incl. header) from the shared
-            // parse — one aggregate per sheet for the whole batch.
-            val counts: Map[String, Map[String, Long]] =
-              sheetsWanted.map { s =>
-                s -> parsed(s).groupBy("_source").count().collect()
-                  .map(r => r.getString(0) -> r.getLong(1)).toMap
-              }.toMap
-            // S2 up-front for every file: state stays untouched if any
-            // workbook is malformed.
-            for (p <- paths; s <- sheetsWanted)
-              require(counts(s).getOrElse(p, 0L) > 0,
-                s"File must contain Transactions, Customers, and " +
-                  s"Products sheets. ($p: $s missing or empty)")
-            val timestamp = java.time.LocalDateTime.now().toString
-            val metas = paths.map { p =>
-              (java.nio.file.Paths.get(p).getFileName.toString,
-                counts("Transactions")(p) - 1, counts("Customers")(p) - 1,
-                counts("Products")(p) - 1)
-            }
-            val seqDf = broadcast(spark.createDataFrame(
-              scala.jdk.CollectionConverters.SeqHasAsJava(
-                paths.zipWithIndex.map { case (p, i) =>
-                  org.apache.spark.sql.Row(p, i) }).asJava,
-              StructType(Seq(StructField("_source", StringType),
-                StructField("_upload_seq", IntegerType)))))
-            val parsedCust = graft.operators.Relational.parseCustomers(
-                parsed("Customers").where(col("_row_idx") > 0), "_c0",
-                passthrough = Seq("_row_idx", "_source"))
-              .join(seqDf, Seq("_source"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val applied = pipeline.store.applyUploads(metas,
-                parsedCust.drop("_source"), timestamp)
-              raws.zip(paths).zip(applied).foreach {
-                case ((raw, p), (uploadId, nChanges)) =>
-                def sheet(s: String) = graft.operators.Relational
-                  .promoteHeader(parsed(s).where(col("_source") === p)
-                    .drop("_source"))
-                pipeline.renderBatch(
-                  parsedCust.where(col("_source") === p)
-                    .drop("_source", "_upload_seq"),
-                  sheet("Transactions"), sheet("Products"),
-                  uploadId, nChanges)
-                java.nio.file.Files.writeString(ledger, raw + "\n",
-                  java.nio.file.StandardOpenOption.CREATE,
-                  java.nio.file.StandardOpenOption.APPEND)
-              }
-            } finally parsedCust.unpersist(blocking = false)
-          } finally parsedAuto.values.foreach(_._2())
-        }
-      }
-      .start()
-  }
-
-  /** Streaming JSONL landing with a dead-letter quarantine: an unbounded
-    * file source over a landing directory of JSON-lines corpus files
-    * ([[graft.sources.Jsonl]] — explicit schema, PERMISSIVE), split per
-    * micro-batch into parsed documents (parquet, the corpus feed) and
-    * quarantined raw lines (text — re-parseable after an upstream fix).
-    * One source cannot drive two streaming sinks without re-reading it,
-    * so the split is a `foreachBatch` with the batch cached across the
-    * two writes.
-    *
-    * Replay safety: `foreachBatch` is at-least-once, so each batch
-    * writes to its own `batch_<id>` subdirectory with `overwrite` — a
-    * replayed batch overwrites its own output and nothing else (the
-    * simpler cousin of [[mergeIndexBatch]]'s marker protocol; here
-    * outputs are per-batch files, not a merged accumulator, so directory
-    * identity alone gives idempotence). Consumers read
-    * `goodDir/batch_*` as one partitioned dataset.
-    *
-    * Scale: the landing scan is line-splittable and schema-pinned (no
-    * inference pass per batch); the split is two column-pruned
-    * projections of one cached scan; quarantine volume is observable per
-    * batch from the written text files — the streaming twin of
-    * [[graft.sources.Jsonl.landingStats]]'s visibility contract.
-    */
   /** Digest-gated idempotent document landing — the JSONL/CSV twin of
     * [[workbookStreamIdempotent]] (VERDICT r10 item 5): a re-delivered
     * shard (same bytes, any name, any micro-batch) must be a no-op.
@@ -647,16 +557,8 @@ object StreamingPipeline {
     import graft.sources.{Csv, Jsonl}
     require(format == "jsonl" || format == "csv",
       s"unknown landing format: $format")
-    val files = spark.readStream
-      .format("binaryFile")
-      .option("pathGlobFilter",
-        if (format == "jsonl") "*.jsonl" else "*.csv")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(landingDir)
+    val files = landedFiles(spark, landingDir,
+        if (format == "jsonl") "*.jsonl" else "*.csv", None)
       .select(col("path"), md5(col("content")).as("digest"))
     files.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -705,6 +607,29 @@ object StreamingPipeline {
       .start()
   }
 
+  /** Streaming JSONL landing with a dead-letter quarantine: an unbounded
+    * file source over a landing directory of JSON-lines corpus files
+    * ([[graft.sources.Jsonl]] — explicit schema, PERMISSIVE), split per
+    * micro-batch into parsed documents (parquet, the corpus feed) and
+    * quarantined raw lines (text — re-parseable after an upstream fix).
+    * One source cannot drive two streaming sinks without re-reading it,
+    * so the split is a `foreachBatch` with the batch cached across the
+    * two writes.
+    *
+    * Replay safety: `foreachBatch` is at-least-once, so each batch
+    * writes to its own `batch_<id>` subdirectory with `overwrite` — a
+    * replayed batch overwrites its own output and nothing else (the
+    * simpler cousin of [[mergeIndexBatch]]'s marker protocol; here
+    * outputs are per-batch files, not a merged accumulator, so directory
+    * identity alone gives idempotence). Consumers read
+    * `goodDir/batch_*` as one partitioned dataset.
+    *
+    * Scale: the landing scan is line-splittable and schema-pinned (no
+    * inference pass per batch); the split is two column-pruned
+    * projections of one cached scan; quarantine volume is observable per
+    * batch from the written text files — the streaming twin of
+    * [[graft.sources.Jsonl.landingStats]]'s visibility contract.
+    */
   def jsonlLandingStream(spark: SparkSession, landingDir: String,
                          goodDir: String, quarantineDir: String,
                          checkpointDir: String): StreamingQuery = {

@@ -109,28 +109,13 @@ class GoldenPipelineSpec extends AnyFunSuite {
     // Measured when the upload's actions were fused; a change that adds
     // jobs to the upload path must raise it knowingly.
     val budget = 20
-    // A workbook of the reference's shape, built here so the budget is
-    // checked without the sample: repeat customer ids (the m:m fan-out
-    // and intra-batch toggles) make the change append run on every
-    // repeat upload, as on the sample.
-    import spark.implicits._
+    // A workbook of the reference's shape, so the budget is checked
+    // without the sample: repeat customer ids (the m:m fan-out and
+    // intra-batch toggles) make the change append run on every repeat
+    // upload, as on the sample.
     val dir = Files.createTempDirectory("graft_jobs").toString
-    val rnd = new scala.util.Random(7)
     val wb = s"$dir/jobs.xlsx"
-    graft.sources.Xlsx.write(wb, Seq(
-      "Transactions" -> (1 to 400).map(i => (s"TXN$i",
-          s"C${rnd.nextInt(60)}", (45000 + rnd.nextInt(300)).toString,
-          s"P${rnd.nextInt(8)}", (rnd.nextInt(100000) / 100.0).toString,
-          "Cash"))
-        .toDF("transaction_id", "customer_id", "transaction_date",
-          "product_code", "amount", "payment_type"),
-      "Customers" -> ((0 until 60) ++ (0 until 6)).zipWithIndex
-        .map { case (c, i) =>
-          Tuple1(s"{C${c}_Name ${c}_n$c@x_1990-01-01_Addr $c-${i / 60}_43899.5}")
-        }.toDF("customer_id-name-email-dob-address-created-date"),
-      "Products" -> (0 until 8).map(i =>
-          (s"P$i", s"Prod $i", s"Cat${i % 4}", "10"))
-        .toDF("product_code", "product_name", "category", "unit_price")))
+    val shape = TestWorkbooks.referenceShaped(wb)
 
     withPipeline { p =>
       p.runBatch(wb, timestamp = "2026-01-01T00:00:00")  // creates state
@@ -142,22 +127,39 @@ class GoldenPipelineSpec extends AnyFunSuite {
         bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
           .invoke(bus, java.lang.Long.valueOf(10000L))
       }
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      drain()
-      sc.addSparkListener(listener)
-      val r = try {
-        val r = p.runBatch(wb, timestamp = "2026-01-02T00:00:00")
+      def withJobs[T](body: => T): (T, Int) = {
+        val jobs = new java.util.concurrent.atomic.AtomicInteger()
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet()
+        }
         drain()
-        r
-      } finally sc.removeSparkListener(listener)
+        sc.addSparkListener(listener)
+        try {
+          val r = body
+          drain()
+          (r, jobs.get())
+        } finally sc.removeSparkListener(listener)
+      }
+      val (r, one) =
+        withJobs(p.runBatch(wb, timestamp = "2026-01-02T00:00:00"))
       assert(r.nChanges > 0)
-      assert(jobs.get() <= budget,
-        s"${jobs.get()} jobs for one upload")
+      assert(one <= budget, s"$one jobs for one upload")
+
+      // Four workbooks in one call share ONE state application; only the
+      // per-file render repeats. Measured when the N-file engine landed.
+      val fourBudget = 50
+      val copies = (1 to 4).map { i =>
+        val c = s"$dir/jobs_$i.xlsx"
+        Files.copy(Paths.get(wb), Paths.get(c))
+        c
+      }
+      val (rs, four) = withJobs(p.runUploads(copies,
+        copies.indices.map(i => s"2026-01-03T00:00:0$i")))
+      assert(rs.map(_.nChanges) === Seq.fill(4)(2 * shape.repeats))
+      info(s"$one jobs for one upload, $four for four in one call")
+      assert(four <= fourBudget, s"$four jobs for four uploads")
     }
   }
 
@@ -177,6 +179,20 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("must contain"))
     // nothing was recorded against state on the failed batches
     assert(p.store.uploads.count() === 0)
+  }
+
+  test("a Customers sheet whose rows hold no cell uploads with no " +
+       "customers, as the reference skips rows that are not records") {
+    val tmp = Files.createTempDirectory("graft_nocells").toString
+    TestWorkbooks.referenceShaped(s"$tmp/wb.xlsx")
+    TestWorkbooks.editSheet(s"$tmp/wb.xlsx", s"$tmp/empty_rows.xlsx", 2)(
+      TestWorkbooks.withRows("""<row r="1"/><row r="2"/>"""))
+    val p = new Pipeline(spark, s"$tmp/state", s"$tmp/processed")
+    val r = p.runBatch(s"$tmp/empty_rows.xlsx")
+    assert(p.store.uploads.head().getAs[Long]("customers_rows") === 1L)
+    assert(p.store.customers.count() === 0L)
+    assert(r.nChanges === 0L)
+    assert(r.merged.count() === 0L)
   }
 
   test("golden: processed xlsx export round-trips the rank table") {

@@ -37,15 +37,40 @@ class RelationalSpec extends AnyFunSuite {
     assert(byId("C6") === Seq("C6", "P", "pe", "e@x", "1994", "6 Fir"))
   }
 
-  test("promoteHeader: first row becomes lowercased column names") {
-    val raw = Seq(
-      (0L, "Transaction_ID", "Amount"),
-      (1L, "T1", "10.5"),
-      (2L, "T2", "11.5")).toDF("_row_idx", "_c0", "_c1")
-    val out = Relational.promoteHeader(raw)
-    assert(out.columns.toSeq === Seq("transaction_id", "amount", "_row_idx"))
-    assert(out.count() === 2)
-    assert(out.where($"transaction_id" === "T1").count() === 1)
+  // P10, P11 on an upload: mixed-case headers and an empty header cell.
+  test("header promotion: lowercased names, _c$i for an empty cell") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_header").toString
+    val raw = s"$dir/raw.xlsx"
+    val tx = Seq(("T1", "C1", "45000", "P1", "10.5", "Cash", "x"),
+                 ("T2", "C1", "45001", "P1", "2.25", "Card", "y"))
+      .toDF("Transaction_ID", "Customer_ID", "Transaction_Date",
+        "PRODUCT_CODE", "Amount", "payment_Type", "note")
+    graft.sources.Xlsx.write(raw, Seq(
+      "Transactions" -> tx,
+      "Customers" -> Seq(Tuple1("{C1_Ann_a@x_1990_1 Main St_100.5}"))
+        .toDF("Customer_Info"),
+      "Products" -> Seq(("P1", "Prod 1", "Cat1", "10"))
+        .toDF("Product_Code", "Product_Name", "Category", "Unit_Price")))
+    // Drop the header cell of the Transactions sheet's last column (G1):
+    // the sheet then has a column whose first row is empty.
+    val wb = s"$dir/upload.xlsx"
+    TestWorkbooks.editSheet(raw, wb, 1)(
+      _.replaceFirst("""<c r="G1"[^>]*>.*?</c>""", ""))
+
+    val p = new graft.Pipeline(spark, s"$dir/state", s"$dir/processed")
+    val rows = graft.sources.Xlsx.read(wb).toMap.apply("Transactions")
+    assert(rows.head.last === null)
+    assert(p.promoted(rows).columns.toSeq === Seq("transaction_id",
+      "customer_id", "transaction_date", "product_code", "amount",
+      "payment_type", "_c6", "_row_idx"))
+    // The upload reads the lowercased names: both rows join and sum.
+    val r = p.runBatch(wb, timestamp = "2026-01-01T00:00:00")
+    assert(r.merged.count() === 2L)
+    assert(r.merged.select("payment_type").as[String].collect().toSeq ===
+      Seq("Cash", "Card"))
+    assert(r.summary.select("amount").as[Double].collect().toSeq ===
+      Seq(12.75))
   }
 
   test("bround is banker's rounding (pandas parity on ties), round is not") {

@@ -91,35 +91,46 @@ class StateStoreSpec extends AnyFunSuite {
       batch(("C1", "a", 0), ("C3", "z", 1)),
       batch(("C2", "y", 0), ("C3", "z", 1), ("C3", "w", 2)))
 
+    // Each file has its own timestamp, as each upload does.
+    val stamps = files.indices.map(i => s"2026-01-0${i + 1}T00:00:00")
+
     // Sequential fold (the reference semantics).
     val seqStore = newStore()
     val seqIds = files.zipWithIndex.map { case (f, i) =>
-      val id = seqStore.recordUpload(s"f$i.xlsx", "t", 1, 1, 1)
-      id -> seqStore.applyCustomerBatch(f, "t", id)
+      val id = seqStore.recordUpload(s"f$i.xlsx", stamps(i), 1, 1, 1)
+      id -> seqStore.applyCustomerBatch(f, stamps(i), id)
     }
 
     // One set-based application of the concatenated batch.
     val multiStore = newStore()
-    val ids = multiStore.recordUploads(
-      files.indices.map(i => (s"f$i.xlsx", "t", 1L, 1L, 1L)))
     val concat = files.zipWithIndex.map { case (f, i) =>
       f.withColumn("_upload_seq", lit(i)) }.reduce(_ unionByName _)
-    val counts = multiStore.applyCustomerBatchMulti(concat, "t", ids)
+    val applied = multiStore.applyUploads(
+      files.indices.map(i => (s"f$i.xlsx", stamps(i), 1L, 1L, 1L)), concat)
+    val ids = applied.map(_._1)
 
     assert(ids === seqIds.map(_._1))
-    assert(counts === seqIds.toMap)
+    assert(applied === seqIds)
+    // identical uploads rows, each stamped with its own file's timestamp
+    def ups(s: StateStore) = s.uploadsOrdered.collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[String]("filename"),
+       r.getAs[String]("timestamp"))).toSeq
+    assert(ups(multiStore) === ups(seqStore))
+    assert(ups(multiStore).map(_._3) === stamps.reverse)
     // identical final customer state (incl. winning upload_id) …
     def state(s: StateStore) = s.customers.collect().map(r =>
       (r.getAs[String]("customer_id"), r.getAs[String]("address"),
        r.getAs[Long]("upload_id"))).toSet
     assert(state(multiStore) === state(seqStore))
-    // … and an identical change log: same rows, same dense id order.
+    // … and an identical change log: same rows, same dense id order,
+    // same per-file change timestamps.
     def log(s: StateStore) = s.addressChanges.orderBy("id").collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("customer_id"),
         r.getAs[String]("old_address"), r.getAs[String]("new_address"),
+        r.getAs[String]("change_timestamp"),
         r.getAs[Long]("upload_id"))).toSeq
     assert(log(multiStore) === log(seqStore))
-    assert(log(multiStore).nonEmpty)
+    assert(log(multiStore).map(_._5).distinct.size > 1)
     // replay absorption works on the whole id set: re-applying the same
     // concatenated batch under the same ids does not double-log
     val before = multiStore.addressChanges.count()
@@ -203,8 +214,8 @@ class StateStoreSpec extends AnyFunSuite {
     }
     def upload(s: StateStore, file: String,
                rows: (String, String, Long)*): Seq[(Long, Long)] =
-      s.applyUploads(Seq((file, 1L, rows.size.toLong, 1L)),
-        batch(rows: _*).withColumn("_upload_seq", lit(0)), "t")
+      s.applyUploads(Seq((file, "t", 1L, rows.size.toLong, 1L)),
+        batch(rows: _*).withColumn("_upload_seq", lit(0)))
 
     val s = new StateStore(spark, dir.toString, Some(flaky))
     assert(upload(s, "f1.xlsx", ("C1", "a", 0), ("C2", "x", 1)) ===

@@ -330,23 +330,37 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("workbook landing stream drives the stateful pipeline via foreachBatch") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
-    val dir = Files.createTempDirectory("graft_wbstream").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details.xlsx"))
+  /** Lands a copy of `src` in `$dir/landing` under `name` by atomic
+    * rename — the landing protocol of the workbook streams, which read a
+    * file as soon as it is listed.
+    */
+  private def land(dir: String, src: String, name: String): Unit = {
+    val staged = java.nio.file.Paths.get(dir, "staging", name)
+    Files.createDirectories(staged.getParent)
+    Files.copy(java.nio.file.Paths.get(src), staged)
+    Files.createDirectories(java.nio.file.Paths.get(dir, "landing"))
+    Files.move(staged, java.nio.file.Paths.get(dir, "landing", name),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 
-    val q = StreamingPipeline.workbookStream(spark, landing,
+  test("workbook landing stream drives the stateful pipeline via foreachBatch") {
+    val dir = Files.createTempDirectory("graft_wbstream").toString
+    val shape = TestWorkbooks.referenceShaped(s"$dir/wb.xlsx")
+    land(dir, s"$dir/wb.xlsx", "Txn_Details.xlsx")
+
+    val q = StreamingPipeline.workbookStream(spark, s"$dir/landing",
       s"$dir/state", s"$dir/processed", s"$dir/ckpt")
     try {
       q.processAllAvailable()
       val store = new graft.state.StateStore(spark, s"$dir/state")
       assert(store.uploads.count() === 1L)
-      assert(store.customers.count() === 100L)
-      assert(store.addressChanges.count() === 4L)
+      val up = store.uploads.head()
+      assert((up.getAs[Long]("transactions_rows"),
+              up.getAs[Long]("customers_rows"),
+              up.getAs[Long]("products_rows")) ===
+        ((shape.txRows, shape.custRows, shape.prodRows)))
+      assert(store.customers.count() === shape.customers)
+      assert(store.addressChanges.count() === shape.repeats)
       // restart-safety: nothing reprocessed on an empty trigger
       q.processAllAvailable()
       assert(store.uploads.count() === 1L)
@@ -356,34 +370,28 @@ class StreamingSpec extends AnyFunSuite {
   test("idempotent workbook stream: identical bytes skip (any name, any " +
        "micro-batch); new content re-ingests") {
     import spark.implicits._
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
     val dir = Files.createTempDirectory("graft_wbidem").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details.xlsx"))
+    val shape = TestWorkbooks.referenceShaped(s"$dir/wb.xlsx")
+    land(dir, s"$dir/wb.xlsx", "Txn_Details.xlsx")
     // byte-identical copy under a DIFFERENT name, same micro-batch
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details_copy.xlsx"))
+    land(dir, s"$dir/wb.xlsx", "Txn_Details_copy.xlsx")
 
-    val q = StreamingPipeline.workbookStreamIdempotent(spark, landing,
-      s"$dir/state", s"$dir/processed", s"$dir/ckpt")
+    val q = StreamingPipeline.workbookStreamIdempotent(spark,
+      s"$dir/landing", s"$dir/state", s"$dir/processed", s"$dir/ckpt")
     val store = new graft.state.StateStore(spark, s"$dir/state")
     try {
       q.processAllAvailable()
       // two landed files, ONE state delta: in-batch digest collapse
       assert(store.uploads.count() === 1L)
       assert(store.uploadDigests.count() === 1L)
-      val changes1 = store.addressChanges.count()
+      assert(store.addressChanges.count() === shape.repeats)
 
       // byte-identical re-upload in a LATER micro-batch, third name:
       // the persistent ledger (not the in-batch set) must skip it
-      Files.copy(java.nio.file.Paths.get(sample),
-        java.nio.file.Paths.get(s"$landing/Txn_Details_again.xlsx"))
+      land(dir, s"$dir/wb.xlsx", "Txn_Details_again.xlsx")
       q.processAllAvailable()
       assert(store.uploads.count() === 1L)
-      assert(store.addressChanges.count() === changes1)
+      assert(store.addressChanges.count() === shape.repeats)
 
       // genuinely NEW content must pass the digest gate
       val tx = Seq(("TXN1", "C1", "45000", "P1", "10.0", "Cash"))
@@ -393,9 +401,10 @@ class StreamingSpec extends AnyFunSuite {
         .toDF("customer_id-name-email-dob-address-created-date")
       val prod = Seq(("P1", "Prod 1", "Cat1", "10"))
         .toDF("product_code", "product_name", "category", "unit_price")
-      graft.sources.Xlsx.write(s"$landing/Txn_Details_v2.xlsx",
+      graft.sources.Xlsx.write(s"$dir/v2.xlsx",
         Seq("Transactions" -> tx, "Customers" -> cust,
           "Products" -> prod))
+      land(dir, s"$dir/v2.xlsx", "Txn_Details_v2.xlsx")
       q.processAllAvailable()
       assert(store.uploads.count() === 2L)
       assert(store.uploadDigests.count() === 2L)
@@ -507,17 +516,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("workbook stream defaults to the sharded MergedData export past " +
        "the row threshold; mergeShards reassembles one deliverable") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
     val dir = Files.createTempDirectory("graft_wbshard").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/Txn_Details.xlsx"))
+    val shape = TestWorkbooks.referenceShaped(s"$dir/wb.xlsx")
+    land(dir, s"$dir/wb.xlsx", "Txn_Details.xlsx")
 
-    // Threshold 100 << the sample's ~1k merged rows: the streaming path
+    // Threshold 100 << the workbook's merged rows: the streaming path
     // must activate the executor-side sharded writer on its own.
-    val q = StreamingPipeline.workbookStream(spark, landing,
+    assert(shape.mergedRows > 100L)
+    val q = StreamingPipeline.workbookStream(spark, s"$dir/landing",
       s"$dir/state", s"$dir/processed", s"$dir/ckpt",
       shardThreshold = 100L)
     try q.processAllAvailable() finally q.stop()
@@ -535,94 +541,150 @@ class StreamingSpec extends AnyFunSuite {
     val shardRows = shards.map(p =>
       graft.sources.Xlsx.read(p, wanted = Some("MergedData"))
         .head._2.length - 1L).sum
-    assert(shardRows === 1041L)  // golden merged-row count, no header
+    assert(shardRows === shape.mergedRows)  // no header
 
     // mergeShards: one deliverable, header once, all rows, in order.
     val mergedPath = s"$dir/processed/merged_all.xlsx"
     graft.sources.Xlsx.mergeShards(shards, mergedPath, "MergedData")
     val rows = graft.sources.Xlsx.read(mergedPath,
       wanted = Some("MergedData")).head._2
-    assert(rows.length - 1L === 1041L)
+    assert(rows.length - 1L === shape.mergedRows)
     assert(rows.head.count(_ == "transaction_id") === 1)
   }
 
-  test("set-based workbook stream: one state application per micro-batch " +
-       "reaches the sequential stream's exact state, incl. 4-then-8 toggles") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
+  test("workbook stream: two workbooks in one micro-batch land in path " +
+       "order, incl. k-then-2k toggles and per-file timestamps") {
+    import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_wbstream_s").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    // Two copies of the SAME workbook in one micro-batch: the CDC
-    // lag-chain must span the file boundary so the second copy re-toggles
-    // against the first's last occurrences (4 then 8 change rows — the
-    // reference's non-idempotent repeat semantics) — with ONE customers
-    // swap and ONE uploads append for the whole batch.
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/a_Txn_Details.xlsx"))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/b_Txn_Details.xlsx"))
+    val shape = TestWorkbooks.referenceShaped(s"$dir/wb.xlsx")
+    // Two copies of the SAME workbook in one micro-batch: the second
+    // copy re-toggles against the first's last occurrences (k then 2k
+    // change rows — the reference's non-idempotent repeat semantics).
+    land(dir, s"$dir/wb.xlsx", "a_Txn_Details.xlsx")
+    land(dir, s"$dir/wb.xlsx", "b_Txn_Details.xlsx")
 
-    val q = StreamingPipeline.workbookStreamSetBased(spark, landing,
+    val q = StreamingPipeline.workbookStream(spark, s"$dir/landing",
       s"$dir/state", s"$dir/processed", s"$dir/ckpt")
     try {
       q.processAllAvailable()
+      // both files arrived in one micro-batch
+      assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq ===
+        Seq(2L))
       val store = new graft.state.StateStore(spark, s"$dir/state")
-      assert(store.uploads.count() === 2L)
-      assert(store.customers.count() === 100L)
-      assert(store.addressChanges.count() === 12L)  // 4 + 8
-      assert(store.addressChanges
-        .where(org.apache.spark.sql.functions.col("upload_id") === 1L)
-        .count() === 4L)
-      assert(store.addressChanges
-        .where(org.apache.spark.sql.functions.col("upload_id") === 2L)
-        .count() === 8L)
+      assert(store.customers.count() === shape.customers)
+      assert(store.addressChanges.count() === 3 * shape.repeats)
+      assert(store.addressChanges.where(col("upload_id") === 1L)
+        .count() === shape.repeats)
+      assert(store.addressChanges.where(col("upload_id") === 2L)
+        .count() === 2 * shape.repeats)
+      // one timestamp per file, taken in path order: the audit order
+      // (timestamp DESC, id DESC) is id order, and each file's change
+      // rows carry its own upload's timestamp
+      val ups = store.uploadsOrdered.collect().map(r =>
+        (r.getAs[Long]("id"), r.getAs[String]("filename"),
+         r.getAs[String]("timestamp"))).toSeq
+      assert(ups.map(t => (t._1, t._2)) ===
+        Seq((2L, "b_Txn_Details.xlsx"), (1L, "a_Txn_Details.xlsx")))
+      val stamped = store.addressChanges
+        .select("upload_id", "change_timestamp").distinct().collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(stamped === ups.map(t => t._1 -> t._3).toMap)
       // per-file exports still render: one processed workbook per upload
       assert(java.nio.file.Files.list(
         java.nio.file.Paths.get(s"$dir/processed")).count() === 2L)
       // restart-safety: nothing reprocessed on an empty trigger
       q.processAllAvailable()
       assert(store.uploads.count() === 2L)
-      assert(store.addressChanges.count() === 12L)
+      assert(store.addressChanges.count() === 3 * shape.repeats)
     } finally q.stop()
   }
 
-  test("set-based workbook stream survives a full restart: the ledger " +
-       "makes at-least-once redelivery a no-op, new files still land") {
-    val sample = "/root/reference/uploads/Txn_Details.xlsx"
-    assume(Files.exists(java.nio.file.Paths.get(sample)))
+  test("workbook stream survives a full restart: the ledger makes " +
+       "at-least-once redelivery a no-op, new files still land") {
+    import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_wbstream_r").toString
-    val landing = s"$dir/landing"
-    Files.createDirectories(java.nio.file.Paths.get(landing))
-    Files.copy(java.nio.file.Paths.get(sample),
-      java.nio.file.Paths.get(s"$landing/a_Txn_Details.xlsx"))
+    val shape = TestWorkbooks.referenceShaped(s"$dir/wb.xlsx")
+    land(dir, s"$dir/wb.xlsx", "a_Txn_Details.xlsx")
 
-    val q1 = StreamingPipeline.workbookStreamSetBased(spark, landing,
+    def start() = StreamingPipeline.workbookStream(spark, s"$dir/landing",
       s"$dir/state", s"$dir/processed", s"$dir/ckpt")
+    val q1 = start()
     try { q1.processAllAvailable() } finally q1.stop()
     val store = new graft.state.StateStore(spark, s"$dir/state")
     assert(store.uploads.count() === 1L)
-    assert(store.addressChanges.count() === 4L)
+    assert(store.addressChanges.count() === shape.repeats)
 
     // A NEW query instance over the same checkpoint + ledger: the file
     // source may redeliver the already-committed file (at-least-once);
     // the ledger must swallow it — no duplicate upload, no re-toggle.
-    val q2 = StreamingPipeline.workbookStreamSetBased(spark, landing,
-      s"$dir/state", s"$dir/processed", s"$dir/ckpt")
+    val q2 = start()
     try {
       q2.processAllAvailable()
       assert(store.uploads.count() === 1L)
-      assert(store.addressChanges.count() === 4L)
+      assert(store.addressChanges.count() === shape.repeats)
       // and a genuinely new file still lands, sequenced after the first
-      Files.copy(java.nio.file.Paths.get(sample),
-        java.nio.file.Paths.get(s"$landing/b_Txn_Details.xlsx"))
+      land(dir, s"$dir/wb.xlsx", "b_Txn_Details.xlsx")
       q2.processAllAvailable()
       assert(store.uploads.count() === 2L)
-      assert(store.addressChanges.count() === 12L)   // 4 then 8 re-toggles
-      assert(store.addressChanges
-        .where(org.apache.spark.sql.functions.col("upload_id") === 2L)
-        .count() === 8L)
+      assert(store.addressChanges.count() === 3 * shape.repeats)
+      assert(store.addressChanges.where(col("upload_id") === 2L)
+        .count() === 2 * shape.repeats)
     } finally q2.stop()
+  }
+
+  test("a malformed workbook is rejected alone: the rest of its " +
+       "micro-batch lands and the workbook streams keep serving") {
+    import spark.implicits._
+    type Start = (String, String, String, String) =>
+      org.apache.spark.sql.streaming.StreamingQuery
+    val streams: Seq[(String, Start)] = Seq(
+      "workbookStream" -> (StreamingPipeline.workbookStream(spark, _, _, _,
+        _)),
+      "workbookStreamIdempotent" -> (StreamingPipeline
+        .workbookStreamIdempotent(spark, _, _, _, _)))
+    for ((name, start) <- streams) {
+      val dir = Files.createTempDirectory("graft_wbbad").toString
+      val shape = TestWorkbooks.referenceShaped(s"$dir/good.xlsx")
+      TestWorkbooks.referenceShaped(s"$dir/later.xlsx", seed = 8)
+      // one workbook without its Products sheet, one with a blank
+      // Customers sheet, one that is no workbook
+      TestWorkbooks.editSheet(s"$dir/good.xlsx",
+        s"$dir/blank_customers.xlsx", 2)(TestWorkbooks.withRows())
+      graft.sources.Xlsx.write(s"$dir/no_products.xlsx", Seq(
+        "Transactions" -> Seq(("T1", "C1")).toDF("transaction_id",
+          "customer_id"),
+        "Customers" -> Seq(Tuple1("{C1_A_a@x_1990_1 St_1.5}"))
+          .toDF("customer_id-name-email-dob-address-created-date")))
+      Files.writeString(java.nio.file.Paths.get(s"$dir/broken.xlsx"),
+        "not a zip")
+      land(dir, s"$dir/good.xlsx", "a_good.xlsx")
+      land(dir, s"$dir/no_products.xlsx", "b_no_products.xlsx")
+      land(dir, s"$dir/broken.xlsx", "c_broken.xlsx")
+      land(dir, s"$dir/blank_customers.xlsx", "c_blank_customers.xlsx")
+
+      val q = start(s"$dir/landing", s"$dir/state", s"$dir/processed",
+        s"$dir/ckpt")
+      val store = new graft.state.StateStore(spark, s"$dir/state")
+      def files = store.uploadsOrdered.select("filename").as[String]
+        .collect().toSeq
+      try {
+        q.processAllAvailable()
+        assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq ===
+          Seq(4L), name)
+        assert(files === Seq("a_good.xlsx"), name)
+        assert(store.addressChanges.count() === shape.repeats, name)
+        assert(store.customers.count() === shape.customers, name)
+
+        land(dir, s"$dir/later.xlsx", "e_later.xlsx")
+        q.processAllAvailable()
+        assert(q.isActive, name)
+        assert(files === Seq("e_later.xlsx", "a_good.xlsx"), name)
+        assert(java.nio.file.Files.list(
+          java.nio.file.Paths.get(s"$dir/processed")).count() === 2L, name)
+        if (name == "workbookStreamIdempotent")
+          assert(store.uploadDigests.count() === 2L, name)
+      } finally q.stop()
+    }
   }
 
   test("jsonlLandingStream splits micro-batches into parsed parquet and " +

@@ -32,65 +32,12 @@ class XlsxSpec extends AnyFunSuite {
       .resolve("t.xlsx").toString
     val df = Seq(("a", "b"), ("c", null)).toDF("h1", "h2")
     Xlsx.write(path, Seq("S" -> df))
-    val got = Xlsx.readSheets(spark, path)("S")
+    val got = Xlsx.toFrame(spark, Xlsx.read(path).toMap.apply("S"))
     assert(got.columns.toSeq === Seq("_row_idx", "_c0", "_c1"))
     val rows = got.orderBy("_row_idx").collect()
     assert(rows.map(_.getLong(0)).toSeq === Seq(0L, 1L, 2L))
     assert(rows(2).getString(1) === "c")
     assert(rows(2).isNullAt(2))
-  }
-
-  test("readSheetAcrossWorkbooks: executors parse many workbooks in parallel") {
-    val dir = Files.createTempDirectory("graft_multiwb")
-    val paths = (1 to 3).map { i =>
-      val p = dir.resolve(s"wb$i.xlsx").toString
-      val df = Seq((s"a$i", s"b$i"), (s"c$i", s"d$i")).toDF("h1", "h2")
-      Xlsx.write(p, Seq("Data" -> df, "Other" -> Seq(("z", "z")).toDF("x", "y")))
-      p
-    }
-    val got = Xlsx.readSheetAcrossWorkbooks(spark, paths, "Data", width = 2)
-    assert(got.columns.toSeq === Seq("_source", "_row_idx", "_c0", "_c1"))
-    // 3 workbooks × (header + 2 data rows)
-    assert(got.count() === 9L)
-    val byFile = got.collect().groupBy(_.getString(0))
-    assert(byFile.size === 3)
-    paths.zipWithIndex.foreach { case (p, i) =>
-      val rows = byFile(p).sortBy(_.getLong(1)).map(_.toSeq.drop(2))
-      assert(rows.toSeq === Seq(Seq("h1", "h2"),
-        Seq(s"a${i + 1}", s"b${i + 1}"), Seq(s"c${i + 1}", s"d${i + 1}")))
-    }
-    // a sheet name absent from every workbook yields no rows, not a crash
-    assert(Xlsx.readSheetAcrossWorkbooks(spark, paths, "Nope", 2).count() === 0L)
-  }
-
-  test("readSheetAcrossWorkbooksAuto: a wider LATER workbook widens the " +
-       "scan for every file (ADVICE r7), single parse pass") {
-    val dir = Files.createTempDirectory("graft_autowb")
-    val narrow = dir.resolve("a_narrow.xlsx").toString
-    Xlsx.write(narrow,
-      Seq("Data" -> Seq(("a", "b")).toDF("h1", "h2")))
-    val wide = dir.resolve("b_wide.xlsx").toString
-    Xlsx.write(wide,
-      Seq("Data" -> Seq(("x", "y", "z", "w")).toDF("h1", "h2", "h3", "h4")))
-    val (got, done) =
-      Xlsx.readSheetAcrossWorkbooksAuto(spark, Seq(narrow, wide), "Data")
-    try {
-      // width = the WIDEST workbook's 4 columns, for both files
-      assert(got.columns.toSeq ===
-        Seq("_source", "_row_idx", "_c0", "_c1", "_c2", "_c3"))
-      val byFile = got.collect().groupBy(_.getString(0))
-      // the wide workbook's extra cells survive
-      val wrow = byFile(wide).sortBy(_.getLong(1)).last.toSeq.drop(2)
-      assert(wrow === Seq("x", "y", "z", "w"))
-      // the narrow workbook pads with nulls beyond its own width
-      val nrow = byFile(narrow).sortBy(_.getLong(1)).last
-      assert(nrow.getString(2) === "a" && nrow.getString(3) === "b")
-      assert(nrow.isNullAt(4) && nrow.isNullAt(5))
-    } finally done()
-    // absent sheet: zero rows at the guard width of 1, not a crash
-    val (none, done2) =
-      Xlsx.readSheetAcrossWorkbooksAuto(spark, Seq(narrow), "Nope")
-    try assert(none.count() === 0L) finally done2()
   }
 
   test("writeSharded: one shard per partition, union equals the frame") {
