@@ -8,24 +8,6 @@ import org.apache.spark.sql.SparkSession
   * expression work a bare `.count()` would let it skip (VERDICT r1 §wrong.2).
   */
 object Bench {
-  /** Blocks until the SparkListener event bus has delivered every queued
-    * event (reflection: `LiveListenerBus.waitUntilEmpty` is
-    * private[spark]). Stage-completed events arrive on an async bus, so
-    * reading a metrics accumulator right after an action returns can
-    * undercount the query just run and bleed the stragglers into the
-    * next query's window after a reset; draining first makes the
-    * read/reset boundary exact. Falls back to a short settle sleep if
-    * the private API ever moves.
-    */
-  private[graft] def drainListenerBus(
-      sc: org.apache.spark.SparkContext): Unit =
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(10000L))
-      ()
-    } catch { case _: Throwable => Thread.sleep(200L) }
-
   // --- Ambient-load instrumentation (VERDICT r10 item 7) -------------
   // Three rounds running, driver bench snapshots have needed manual idle
   // re-runs to be trusted (r8–r10 each caught +40–50% uniform drift from
@@ -181,21 +163,10 @@ object Bench {
     // Eager scratch-listener install (round-14 ADVICE): the first sliced
     // query's first slice must count like every other.
     graft.operators.Scratch.install(spark)
-    // Opt-in (SPARK_GRAFT_SHUFFLE=1): per-query total shuffle-write
-    // bytes via a stage-completion listener — exact in local mode (one
-    // JVM sees every task). Feeds SCALING.md's cluster-shape projection
-    // (measured bytes → per-executor shuffle at 100 TB), costs nothing
-    // when off.
-    val traceShuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").contains("1")
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    if (traceShuffle) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler
-              .SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
+    // Per-query total shuffle-write bytes, read from the Scratch
+    // counter installed above — exact in local mode (one JVM sees every
+    // task). Feeds SCALING.md's cluster-shape projection (measured bytes
+    // → per-executor shuffle at 100 TB).
     val shuffleByQuery =
       scala.collection.mutable.LinkedHashMap.empty[String, Long]
     // Session warmup (codegen/JIT/file-listing) so the first timed query
@@ -243,20 +214,17 @@ object Bench {
       .map { case (name, fn) =>
         // min-of-2, but only over runs that succeeded; one failure marks
         // the query failed (a flaky query is not a benchmarkable one).
-        if (traceShuffle) {
-          drainListenerBus(spark.sparkContext)
-          shuffleBytes.set(0L)
-        }
+        val shuffleBefore =
+          graft.operators.Scratch.shuffleBytesWritten(spark)
         val timed =
           (for (a <- timeCold(name, fn); b <- timeCold(name, fn))
             yield math.min(a, b))
         // both cold runs shuffle identically → halve the accumulated
-        // total for the per-run figure (bus drained first so no
+        // delta for the per-run figure (bus drained first so no
         // stage-completed event is missed or mis-attributed)
-        if (traceShuffle && timed.isDefined) {
-          drainListenerBus(spark.sparkContext)
-          shuffleByQuery(name) = shuffleBytes.get() / 2
-        }
+        if (timed.isDefined)
+          shuffleByQuery(name) = (graft.operators.Scratch
+            .shuffleBytesWritten(spark) - shuffleBefore) / 2
         name -> timed
       }
     val results = attempts.collect { case (n, Some(t)) => n -> t }
@@ -400,7 +368,7 @@ object Bench {
     }
     val failedAll = failed ++ (if (streamFailed) Seq("stream_ingest") else Nil)
     val failedAllJson = failedAll.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shuffleJson = if (!traceShuffle) "" else
+    val shuffleJson =
       shuffleByQuery.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(""","shuffle_bytes":{""", ",", "}")
     // Ambient classification: sys_pct > 0.15 (the -Xmx100g kernel-storm

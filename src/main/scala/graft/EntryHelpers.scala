@@ -111,8 +111,9 @@ private[graft] object EntryHelpers {
     * (session, dir).
     */
   private[graft] final class SessionMemo[V](onEvict: V => Unit = (_: V) => ()) {
-    private[graft] val m =
+    private val m =
       new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V]()
+    SessionMemo.all.add(this)
     def get(s: SparkSession, dir: String)
            (build: (SparkSession, String) => V): V = {
       val it = m.entrySet().iterator()
@@ -125,7 +126,19 @@ private[graft] object EntryHelpers {
       }
       m.computeIfAbsent((s, dir), k => build(k._1, k._2))
     }
-    def values: java.util.Collection[V] = m.values
+    private def evictAll(): Unit =
+      m.values.forEach(v => try onEvict(v) catch { case _: Throwable => () })
+  }
+
+  private[graft] object SessionMemo {
+    /** Every memo built, so one JVM shutdown hook releases what they
+      * own: their temp state/landing dirs die with the JVM even if their
+      * session never stops.
+      */
+    private val all =
+      new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo[_]]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      all.forEach(_.evictAll())))
   }
 
   /** Customer-dimension row count: cheap (parquet footer metadata) but
@@ -377,9 +390,9 @@ private[graft] object EntryHelpers {
 
   /** Deterministic two-batch state build for the S10/S11 audit scans: the
     * customer table becomes two synthetic customer batches (batch 2 changes
-    * the address of every custkey % 3 == 0 row), run through the real
-    * [[graft.state.StateStore]] CDC + upsert machinery into a fresh temp
-    * state directory — so `uploads`/`address_changes` and their ordered
+    * the address of every custkey % 3 == 0 row), landed as one 2-file
+    * [[graft.state.StateStore.applyUploads]] (equal to landing them one
+    * after another) into a fresh temp state directory — so `uploads`/`address_changes` and their ordered
     * scans are reproducible from the parquet inputs alone, and the DuckDB
     * oracle can recompute them (/root/reference/app.py:193-203).
     */
@@ -397,56 +410,6 @@ private[graft] object EntryHelpers {
   private[graft] val auditStates =
     new SessionMemo[(graft.state.StateStore, java.nio.file.Path)](
       { case (_, p) => deleteTree(p) })
-
-  // Temp state/landing dirs die with the JVM even if their session never
-  // stops.
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    auditStates.values.forEach { case (_, p) =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    jsonlDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    csvDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    jsonlRetypedDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    csvRetypedDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    jsonlEvolvedDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    csvEvolvedDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    incrementalBaseDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    epochBaseDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    producedCorpus.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    simhashEdgeDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    neardupEdgeDirs.values.forEach { p =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    ingestStates.values.forEach { case (_, p) =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    jsonlIngestStates.values.forEach { case (_, p) =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-    csvIngestStates.values.forEach { case (_, p) =>
-      try deleteTree(p) catch { case _: Throwable => () }
-    }
-  }))
 
   /** Memoized materialized edge tables — the wedge family's 100-TB
     * input contract ([[Dedup.writePairGraph]]) wired into the registry:
@@ -906,14 +869,13 @@ private[graft] object EntryHelpers {
     val baseAddr = concat(col("c_mktsegment"), lit(" St "),
       col("c_nationkey").cast("string"))
     val n = cust.count()
-    val id1 = store.recordUpload("batch_1.xlsx", "2026-01-01T00:00:00",
-      0L, n, 0L)
-    store.applyCustomerBatch(batch(baseAddr), "2026-01-01T00:00:00", id1)
-    val id2 = store.recordUpload("batch_2.xlsx", "2026-01-02T00:00:00",
-      0L, n, 0L)
     val changed = when(col("c_custkey") % 3 === 0,
       concat(baseAddr, lit("B"))).otherwise(baseAddr)
-    store.applyCustomerBatch(batch(changed), "2026-01-02T00:00:00", id2)
+    store.applyUploads(
+      Seq(("batch_1.xlsx", "2026-01-01T00:00:00", 0L, n, 0L),
+        ("batch_2.xlsx", "2026-01-02T00:00:00", 0L, n, 0L)),
+      batch(baseAddr).withColumn("_upload_seq", lit(0))
+        .unionByName(batch(changed).withColumn("_upload_seq", lit(1))))
     store
   }
 }

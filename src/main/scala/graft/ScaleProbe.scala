@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.Similarity
+import graft.operators.{Scratch, Similarity}
 
 /** One-off scale measurement for PARAMETERIZED operator variants — the
   * knob the registry queries deliberately pin (their oracles replay one
@@ -305,15 +305,6 @@ object ScaleProbe {
           else java.nio.file.Files
             .createTempDirectory("graft_cprod").toString
         val d = spark.read.parquet(s"$sfDir/documents.parquet")
-        val sb = new java.util.concurrent.atomic.AtomicLong(0L)
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler
-                  .SparkListenerStageCompleted): Unit =
-              sb.addAndGet(sc.stageInfo.taskMetrics
-                .shuffleWriteMetrics.bytesWritten)
-          })
         // Sliced-stage scratch dirs, deleted after the final read —
         // each sliced stage writes per-slice parquet manifests that
         // would otherwise accumulate in /tmp across probe runs.
@@ -327,17 +318,16 @@ object ScaleProbe {
         val out = new StringBuilder("{\"probe\":\"corpus_production\"")
         def stage(name: String)(f: => org.apache.spark.sql.DataFrame)
             : org.apache.spark.sql.DataFrame = {
-          Bench.drainListenerBus(spark.sparkContext)
-          sb.set(0L)
+          val sb0 = Scratch.shuffleBytesWritten(spark)
           val t0 = System.nanoTime()
           f.write.mode("overwrite").parquet(s"$outDir/$name")
           val back = spark.read.parquet(s"$outDir/$name")
           val n = back.count()
           val sec = (System.nanoTime() - t0) / 1e9
-          Bench.drainListenerBus(spark.sparkContext)
+          val sb = Scratch.shuffleBytesWritten(spark) - sb0
           out.append(",\"" + name + "\":{\"sec\":" + sec +
-            ",\"shuffle_b\":" + sb.get() + ",\"rows\":" + n + "}")
-          println(s"[cprod] $name: $sec s, ${sb.get()} shuffle B, $n rows")
+            ",\"shuffle_b\":" + sb + ",\"rows\":" + n + "}")
+          println(s"[cprod] $name: $sec s, $sb shuffle B, $n rows")
           back
         }
         // Stage 1 is SUB-STAGED per gate: each gate materializes its
@@ -600,29 +590,17 @@ object ScaleProbe {
     }
 
     // Total shuffle-write bytes per run — the number the SCALING.md
-    // cluster-shape projection divides by executor count. Collected via
-    // a stage-completion listener (local metrics are exact here: one
-    // JVM sees every task).
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler
-              .SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
-
+    // cluster-shape projection divides by executor count, read from the
+    // Scratch counter (local metrics are exact here: one JVM sees every
+    // task).
     def once(): (Double, Long) = {
       spark.catalog.clearCache()
       System.gc()
-      Bench.drainListenerBus(spark.sparkContext)
-      shuffleBytes.set(0L)
+      val shuffle0 = Scratch.shuffleBytesWritten(spark)
       val t0 = System.nanoTime()
       pairsDf().write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Bench.drainListenerBus(spark.sparkContext)
-      (wall, shuffleBytes.get())
+      (wall, Scratch.shuffleBytesWritten(spark) - shuffle0)
     }
     val outcomes = (1 to runs).map(_ => once())
     val best = outcomes.map(_._1).min

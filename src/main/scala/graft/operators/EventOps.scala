@@ -66,14 +66,45 @@ object EventOps {
               col(valueCol).as("new_value"))
   }
 
-  /** The full J3 algebra (SURVEY.md §2.3): change capture for a batch
-    * against *persistent keyed state*, where the "old" value for the k-th
-    * in-batch occurrence of a key is the (k-1)-th occurrence's value, or
-    * the stored state for k=1 — `coalesce(lag over batch order, stored)`.
-    * Identical composition to [[graft.state.StateStore.applyCustomerBatch]],
-    * exposed generically so the algebra itself is oracle-checkable.
+  /** The J3 change window (SURVEY.md §2.3), the one definition of
+    * change capture against *persistent keyed state*: the "old" value
+    * for the k-th in-batch occurrence of a key is the (k-1)-th
+    * occurrence's value, or the stored state for k=1 —
+    * `coalesce(lag(value) over spec, stored)` as column `_old` — and a
+    * row is a change when `_old` exists and differs from its value.
+    * [[statefulChangeCapture]] and
+    * [[graft.state.StateStore.applyUploads]] both build on it, so the
+    * `cdc_state_join` oracle checks the expression an upload runs.
     *
-    * @param batch rows carrying `keyCol`, `valueCol`, `orderCol`, and
+    * @param orderCols batch order within a key
+    */
+  final case class ChangeWindow(keyCol: String, valueCol: String,
+                                orderCols: Seq[org.apache.spark.sql.Column]) {
+    val spec: org.apache.spark.sql.expressions.WindowSpec =
+      Window.partitionBy(keyCol).orderBy(orderCols: _*)
+
+    /** `batch` left-joined to `state`'s stored value (`_stored`), plus
+      * `_old`.
+      *
+      * @param state one row per key: (`keyCol`, `valueCol`, …)
+      */
+    def withOld(batch: DataFrame, state: DataFrame): DataFrame =
+      batch
+        .join(state.select(col(keyCol), col(valueCol).as("_stored")),
+              Seq(keyCol), "left")
+        .withColumn("_old",
+          coalesce(lag(col(valueCol), 1).over(spec), col("_stored")))
+
+    /** The change predicate over a [[withOld]] frame. */
+    def changed: org.apache.spark.sql.Column =
+      col("_old").isNotNull && col("_old") =!= col(valueCol)
+  }
+
+  /** The full J3 algebra (SURVEY.md §2.3) as a generic operator: the
+    * [[ChangeWindow]]'s change rows, exposed so the algebra itself is
+    * oracle-checkable.
+    *
+    * @param batch rows carrying `keyCol`, `valueCol`, `orderCols`, and
     *              `carryCols` to pass through
     * @param state one row per key: (`keyCol`, `valueCol`)
     */
@@ -81,13 +112,9 @@ object EventOps {
                             keyCol: String, valueCol: String,
                             orderCols: Seq[org.apache.spark.sql.Column],
                             carryCols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(orderCols: _*)
-    batch
-      .join(state.select(col(keyCol), col(valueCol).as("_stored")),
-            Seq(keyCol), "left")
-      .withColumn("_old",
-        coalesce(lag(col(valueCol), 1).over(w), col("_stored")))
-      .where(col("_old").isNotNull && col("_old") =!= col(valueCol))
+    val cdc = ChangeWindow(keyCol, valueCol, orderCols)
+    cdc.withOld(batch, state)
+      .where(cdc.changed)
       .select(col(keyCol) +: carryCols.map(col) :+
         col("_old").as("old_value") :+ col(valueCol).as("new_value"): _*)
   }

@@ -218,14 +218,6 @@ object Relational {
       .withColumn("amount", bround(col("amount"), 2))
   }
 
-  /** A4 (app.py:149-151): per-customer nested category detail —
-    * `customer_id → list[{name, category, amount}]`, amounts rounded.
-    * pandas preserves A1's (customer_id, name, category) key-sorted order,
-    * so within one customer_id the record order is (name, category) — the
-    * struct leads with `name` so `sort_array` reproduces that order
-    * distributively, including for duplicate customer ids with differing
-    * names.
-    */
   /** Order-insensitive table checksum per group — the reconciliation
     * primitive for comparing a table across two systems (post-migration
     * diff, replica audit) without moving the rows: every row folds to a
@@ -250,6 +242,14 @@ object Relational {
         expr("bit_xor(_h)").as("checksum"))
       .orderBy(groupCol)
 
+  /** A4 (app.py:149-151): per-customer nested category detail —
+    * `customer_id → list[{name, category, amount}]`, amounts rounded.
+    * pandas preserves A1's (customer_id, name, category) key-sorted order,
+    * so within one customer_id the record order is (name, category) — the
+    * struct leads with `name` so `sort_array` reproduces that order
+    * distributively, including for duplicate customer ids with differing
+    * names.
+    */
   def nestDetails(categoryTotals: DataFrame): DataFrame =
     categoryTotals
       .withColumn("amount", bround(col("amount"), 2))

@@ -7,20 +7,25 @@ package graft.operators
   * ContextCleaner's weak references fire and the slice's shuffle files
   * are deleted BEFORE the next slice starts — that bound on peak
   * scratch is the whole point of slicing (measured ~60 GB of spill per
-  * unsliced build stride at sf1000).
+  * unsliced build stride at sf1000). The shuffle-write counter behind
+  * that gate is the engine's one SparkListener; Bench and ScaleProbe
+  * read their shuffle figures from it too ([[shuffleBytesWritten]]).
   */
 private[graft] object Scratch {
 
-  /** Cumulative shuffle-write bytes per live SparkContext, fed by a
-    * stage-completion listener (installed eagerly via [[install]], or
-    * lazily on first use) and reset by [[gcIfPressured]] when — and only
-    * when — the GC hint fires. Exact in local mode — one JVM sees
-    * every task; on a cluster the driver-side stage metrics are the
-    * same aggregate the UI reports.
+  /** Per-context shuffle-write bytes: a monotonic `total`, fed by the
+    * one stage-completion listener of the engine, and the `baseline`
+    * the total stood at when scratch was last reclaimed. Exact in local
+    * mode — one JVM sees every task; on a cluster the driver-side stage
+    * metrics are the same aggregate the UI reports.
     */
-  private val scratchBytes = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.SparkContext,
-    java.util.concurrent.atomic.AtomicLong]()
+  private final class Counter {
+    val total = new java.util.concurrent.atomic.AtomicLong(0L)
+    val baseline = new java.util.concurrent.atomic.AtomicLong(0L)
+  }
+
+  private val counters = new java.util.concurrent.ConcurrentHashMap[
+    org.apache.spark.SparkContext, Counter]()
 
   /** Eagerly install the stage listener for `spark`'s context (round-14
     * ADVICE): lazily installed on the first [[gcIfPressured]] call, the
@@ -36,24 +41,51 @@ private[graft] object Scratch {
     ()
   }
 
-  private def counter(sc: org.apache.spark.SparkContext)
-      : java.util.concurrent.atomic.AtomicLong = {
+  private def counter(sc: org.apache.spark.SparkContext): Counter = {
     // stopped contexts can never fire their listener again — drop them
     // so the map cannot grow across session lifetimes
-    scratchBytes.keySet.removeIf(_.isStopped)
-    scratchBytes.computeIfAbsent(sc, { sc2 =>
-      val c = new java.util.concurrent.atomic.AtomicLong(0L)
+    counters.keySet.removeIf(_.isStopped)
+    counters.computeIfAbsent(sc, { sc2 =>
+      val c = new Counter
       sc2.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
             e: org.apache.spark.scheduler
               .SparkListenerStageCompleted): Unit = {
-          c.addAndGet(
+          c.total.addAndGet(
             e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
           ()
         }
       })
       c
     })
+  }
+
+  /** Blocks until the SparkListener event bus has delivered every queued
+    * event (reflection: `LiveListenerBus.waitUntilEmpty` is
+    * private[spark]). Stage-completed events arrive on an async bus, so
+    * reading a metrics counter right after an action returns can
+    * undercount the query just run and bleed the stragglers into the
+    * next query's window; draining first makes the read boundary exact.
+    * Falls back to a short settle sleep if the private API ever moves.
+    */
+  private[graft] def drainListenerBus(
+      sc: org.apache.spark.SparkContext): Unit =
+    try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(10000L))
+      ()
+    } catch { case _: Throwable => Thread.sleep(200L) }
+
+  /** Total shuffle-write bytes of `spark`'s context since the counter
+    * was installed, with the listener bus drained first: callers that
+    * measure a run (Bench's per-query `shuffle_bytes`, ScaleProbe) read
+    * it before and after and take the difference.
+    */
+  private[graft] def shuffleBytesWritten(
+      spark: org.apache.spark.sql.SparkSession): Long = {
+    drainListenerBus(spark.sparkContext)
+    counter(spark.sparkContext).total.get()
   }
 
   /** Default scratch threshold below which the per-slice GC hint is
@@ -70,21 +102,24 @@ private[graft] object Scratch {
     */
   private[graft] def pendingScratchBytes(
       spark: org.apache.spark.sql.SparkSession): Long = {
-    graft.Bench.drainListenerBus(spark.sparkContext)
-    counter(spark.sparkContext).get()
+    drainListenerBus(spark.sparkContext)
+    val c = counter(spark.sparkContext)
+    c.total.get() - c.baseline.get()
   }
 
   /** Record that a full GC just ran OUTSIDE the gate (Bench's cold-cache
     * reset before every timed run, Verify's per-query nudge): the
     * accumulated scratch has had its reclaim opportunity, so the gate
-    * restarts from zero — otherwise the bytes of every PRIOR query in a
-    * long run would count against the first slice of the next sliced
-    * query and fire a redundant GC inside its timed region.
+    * restarts from the current total — otherwise the bytes of every
+    * PRIOR query in a long run would count against the first slice of
+    * the next sliced query and fire a redundant GC inside its timed
+    * region.
     */
   private[graft] def noteReclaim(
       spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.Bench.drainListenerBus(spark.sparkContext)
-    counter(spark.sparkContext).set(0L)
+    drainListenerBus(spark.sparkContext)
+    val c = counter(spark.sparkContext)
+    c.baseline.set(c.total.get())
   }
 
   /** `System.gc()` only when the slices have actually produced scratch
@@ -105,21 +140,20 @@ private[graft] object Scratch {
     val c = counter(spark.sparkContext)
     // stage-completed events arrive on the async listener bus — drain
     // so the slice that just finished is fully counted before deciding
-    graft.Bench.drainListenerBus(spark.sparkContext)
+    drainListenerBus(spark.sparkContext)
     // Malformed override falls back to the default instead of throwing
     // NumberFormatException out of the per-slice loop (round-14 ADVICE).
     val thr = sys.env.get("SPARK_GRAFT_SCRATCH_GC_MIN_BYTES")
       .flatMap(s => scala.util.Try(s.toLong).toOption)
       .getOrElse(DefaultMinScratchBytes)
-    // Accumulate-until-reclaim (round-14 ADVICE): reset the counter only
-    // when the GC actually fires — N sub-threshold slices must still add
-    // up to a reclaim once their dead shuffle files total the threshold,
-    // matching the "since the last reclaim" scaladoc (the old
-    // getAndSet(0) dropped sub-threshold scratch on the floor every
-    // call, leaving only the 30-min periodic-GC backstop).
-    if (c.get() >= thr) {
-      c.set(0L)
+    // Accumulate-until-reclaim (round-14 ADVICE): the baseline moves
+    // only when the GC actually fires, so N sub-threshold slices still
+    // add up to a reclaim. Moving it by compare-and-set means that of
+    // concurrent slices (the slice pool) only one fires the GC for the
+    // same scratch, and bytes recorded after the read stay pending.
+    val base = c.baseline.get()
+    val total = c.total.get()
+    if (total - base >= thr && c.baseline.compareAndSet(base, total))
       System.gc()
-    }
   }
 }

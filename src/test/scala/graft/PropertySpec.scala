@@ -112,9 +112,13 @@ class PropertySpec extends AnyFunSuite {
       (s"C$i", s"n$i", s"e$i", "1990", s"addr-$i", "100", i.toLong)
     }.toDF("customer_id", "name", "email", "dob", "address",
            "created_date", "_row_idx")
-    assert(store.applyCustomerBatch(batch, "t1", 1) === 0)
+    def upload(ts: String): Long = store.applyUploads(
+      Seq(("f.xlsx", ts, 0L, 100L, 0L)),
+      batch.withColumn("_upload_seq", lit(0)))
+      .head._2
+    assert(upload("t1") === 0)
     val s1 = store.customers.orderBy("customer_id").collect().map(_.toSeq.take(6))
-    assert(store.applyCustomerBatch(batch, "t2", 2) === 0)  // replay: no CDC
+    assert(upload("t2") === 0)  // replay: no CDC
     val s2 = store.customers.orderBy("customer_id").collect().map(_.toSeq.take(6))
     assert(s1.toSeq === s2.toSeq)
     assert(store.customers.count() === 100)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.state.StateStore
@@ -19,10 +20,16 @@ class StateStoreSpec extends AnyFunSuite {
       .toDF("customer_id", "name", "email", "dob", "address",
             "created_date", "_row_idx")
 
+  /** One one-file upload through [[StateStore.applyUploads]]. */
+  private def upload(s: StateStore, file: String, ts: String,
+                     rows: (String, String, Long)*): Seq[(Long, Long)] =
+    s.applyUploads(Seq((file, ts, 1L, rows.size.toLong, 1L)),
+      batch(rows: _*).withColumn("_upload_seq", lit(0)))
+
   test("swap recovery: a crash between the two renames loses no state") {
     val dir = Files.createTempDirectory("graft_state_rec")
     val s = new StateStore(spark, dir.toString)
-    s.applyCustomerBatch(batch(("C1", "addr-1", 1L)), "t1", 1)
+    upload(s, "f1.xlsx", "t1", ("C1", "addr-1", 1L))
     assert(s.customers.count() === 1)
 
     // Simulate the crash window of swapWrite: the new state sits fully
@@ -66,10 +73,9 @@ class StateStoreSpec extends AnyFunSuite {
     }
     val s = new StateStore(spark, dir.toString, Some(wrapped))
     assert(calls.headOption === Some("recoverAll"))
-    val id = s.recordUpload("f.xlsx", "t1", 10L, 2L, 3L)
+    val Seq((id, n)) =
+      upload(s, "f.xlsx", "t1", ("C1", "a1", 1L), ("C1", "a2", 2L))
     assert(id === 1L)
-    val n = s.applyCustomerBatch(
-      batch(("C1", "a1", 1L), ("C1", "a2", 2L)), "t1", id)
     assert(n === 1L)                      // intra-batch toggle captured
     assert(s.customers.count() === 1L)    // last-wins upsert through it
     assert(s.customers.head().getAs[String]("address") === "a2")
@@ -81,32 +87,30 @@ class StateStoreSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(dir.resolve("customers")))
   }
 
-  test("applyCustomerBatchMulti is equivalent to folding applyCustomerBatch " +
-       "over the files, in one state application") {
-    import org.apache.spark.sql.functions.{col, lit}
+  test("an N-file applyUploads equals folding one-file applyUploads " +
+       "over the files") {
     // Three files with cross-file toggles, intra-file duplicates, a
     // fresh customer mid-batch, and a customer untouched after file 1.
-    val files = Seq(
-      batch(("C1", "a", 0), ("C2", "x", 1), ("C1", "b", 2)),
-      batch(("C1", "a", 0), ("C3", "z", 1)),
-      batch(("C2", "y", 0), ("C3", "z", 1), ("C3", "w", 2)))
+    val files: Seq[Seq[(String, String, Long)]] = Seq(
+      Seq(("C1", "a", 0), ("C2", "x", 1), ("C1", "b", 2)),
+      Seq(("C1", "a", 0), ("C3", "z", 1)),
+      Seq(("C2", "y", 0), ("C3", "z", 1), ("C3", "w", 2)))
 
     // Each file has its own timestamp, as each upload does.
     val stamps = files.indices.map(i => s"2026-01-0${i + 1}T00:00:00")
 
     // Sequential fold (the reference semantics).
     val seqStore = newStore()
-    val seqIds = files.zipWithIndex.map { case (f, i) =>
-      val id = seqStore.recordUpload(s"f$i.xlsx", stamps(i), 1, 1, 1)
-      id -> seqStore.applyCustomerBatch(f, stamps(i), id)
+    val seqIds = files.zipWithIndex.flatMap { case (f, i) =>
+      upload(seqStore, s"f$i.xlsx", stamps(i), f: _*)
     }
 
     // One set-based application of the concatenated batch.
     val multiStore = newStore()
     val concat = files.zipWithIndex.map { case (f, i) =>
-      f.withColumn("_upload_seq", lit(i)) }.reduce(_ unionByName _)
-    val applied = multiStore.applyUploads(
-      files.indices.map(i => (s"f$i.xlsx", stamps(i), 1L, 1L, 1L)), concat)
+      batch(f: _*).withColumn("_upload_seq", lit(i)) }.reduce(_ unionByName _)
+    val applied = multiStore.applyUploads(files.zipWithIndex.map {
+      case (f, i) => (s"f$i.xlsx", stamps(i), 1L, f.size.toLong, 1L) }, concat)
     val ids = applied.map(_._1)
 
     assert(ids === seqIds.map(_._1))
@@ -131,14 +135,6 @@ class StateStoreSpec extends AnyFunSuite {
         r.getAs[Long]("upload_id"))).toSeq
     assert(log(multiStore) === log(seqStore))
     assert(log(multiStore).map(_._5).distinct.size > 1)
-    // replay absorption works on the whole id set: re-applying the same
-    // concatenated batch under the same ids does not double-log
-    val before = multiStore.addressChanges.count()
-    multiStore.applyCustomerBatchMulti(concat, "t2", ids)
-    assert(multiStore.addressChanges
-      .where(col("upload_id").isin(ids: _*)).count() >= before)
-    assert(multiStore.addressChanges.groupBy("id").count()
-      .where(col("count") > 1).isEmpty)
   }
 
   test("upsert is last-writer-wins within a batch; CDC sees intra-batch mutations") {
@@ -146,9 +142,8 @@ class StateStoreSpec extends AnyFunSuite {
     // C1 appears twice with different addresses: 1 intra-batch change,
     // final state = second address (mirrors the reference sample's
     // duplicate-id behavior, app.py:110-123)
-    val n1 = s.applyCustomerBatch(
-      batch(("C1", "addr-A", 0), ("C2", "addr-X", 1), ("C1", "addr-B", 2)),
-      "t1", uploadId = 1)
+    val n1 = upload(s, "f1.xlsx", "t1",
+      ("C1", "addr-A", 0), ("C2", "addr-X", 1), ("C1", "addr-B", 2)).head._2
     assert(n1 === 1)
     val state = s.customers.collect().map(r =>
       r.getAs[String]("customer_id") -> r.getAs[String]("address")).toMap
@@ -156,9 +151,8 @@ class StateStoreSpec extends AnyFunSuite {
 
     // replay the same batch: stored addr-B vs first occurrence addr-A →
     // change; then A→B again → second change. 2 changes per replay.
-    val n2 = s.applyCustomerBatch(
-      batch(("C1", "addr-A", 0), ("C2", "addr-X", 1), ("C1", "addr-B", 2)),
-      "t2", uploadId = 2)
+    val n2 = upload(s, "f2.xlsx", "t2",
+      ("C1", "addr-A", 0), ("C2", "addr-X", 1), ("C1", "addr-B", 2)).head._2
     assert(n2 === 2)
     assert(s.addressChanges.count() === 3)
     // ids dense in file order
@@ -169,30 +163,8 @@ class StateStoreSpec extends AnyFunSuite {
           (3L, "addr-A", "addr-B")))
   }
 
-  test("ledger replay under the SAME upload id absorbs orphaned changes") {
-    val s = newStore()
-    s.applyCustomerBatch(batch(("C1", "addr-A", 0)), "t1", uploadId = 1)
-    s.applyCustomerBatch(batch(("C1", "addr-B", 0)), "t2", uploadId = 2)
-    assert(s.addressChanges.count() === 1)
-    // A crash between the change append and the customers swap makes the
-    // ledger replay the batch under the same upload id; the second
-    // attempt must replace upload 2's rows, not double-log them.
-    s.applyCustomerBatch(batch(("C1", "addr-C", 0)), "t2b", uploadId = 2)
-    val rows = s.addressChanges.orderBy("id").collect().map(r =>
-      (r.getAs[Long]("id"), r.getAs[Long]("upload_id"),
-       r.getAs[String]("new_address"))).toSeq
-    // upload 2 appears once (the replayed attempt), ids still dense
-    assert(rows === Seq((1L, 2L, "addr-C")))
-    // a NEW upload id appends as usual (cross-upload non-idempotence)
-    s.applyCustomerBatch(batch(("C1", "addr-D", 0)), "t3", uploadId = 3)
-    assert(s.addressChanges.count() === 2)
-    assert(s.addressChanges.orderBy("id").collect()
-      .map(_.getAs[Long]("id")).toSeq === Seq(1L, 2L))
-  }
-
   test("a crash at the customers swap replays under the SAME upload id: " +
        "one uploads row, dense change ids, no doubled change rows") {
-    import org.apache.spark.sql.functions.lit
     val dir = Files.createTempDirectory("graft_state_crash")
     val inner = new graft.state.ParquetSwapBackend(spark, dir)
     var crashes = 0
@@ -212,22 +184,17 @@ class StateStoreSpec extends AnyFunSuite {
       }
       def recoverAll() = inner.recoverAll()
     }
-    def upload(s: StateStore, file: String,
-               rows: (String, String, Long)*): Seq[(Long, Long)] =
-      s.applyUploads(Seq((file, "t", 1L, rows.size.toLong, 1L)),
-        batch(rows: _*).withColumn("_upload_seq", lit(0)))
-
     val s = new StateStore(spark, dir.toString, Some(flaky))
-    assert(upload(s, "f1.xlsx", ("C1", "a", 0), ("C2", "x", 1)) ===
+    assert(upload(s, "f1.xlsx", "t", ("C1", "a", 0), ("C2", "x", 1)) ===
       Seq((1L, 0L)))
     val second = Seq(("C1", "b", 0L), ("C2", "y", 1L), ("C1", "c", 2L))
     crashes = 1
-    intercept[IllegalStateException](upload(s, "f2.xlsx", second: _*))
+    intercept[IllegalStateException](upload(s, "f2.xlsx", "t", second: _*))
     assert(s.addressChanges.count() === 3L)   // the orphaned attempt
 
     // The at-least-once replay, in a restarted store.
     val replay = new StateStore(spark, dir.toString, Some(flaky))
-    assert(upload(replay, "f2.xlsx", second: _*) === Seq((2L, 3L)))
+    assert(upload(replay, "f2.xlsx", "t", second: _*) === Seq((2L, 3L)))
     assert(replay.uploadsOrdered.collect().map(r =>
       (r.getAs[Long]("id"), r.getAs[String]("filename"))).toSeq ===
       Seq((2L, "f2.xlsx"), (1L, "f1.xlsx")))
@@ -239,28 +206,58 @@ class StateStoreSpec extends AnyFunSuite {
       (r.getAs[String]("customer_id"), r.getAs[String]("address"),
        r.getAs[Long]("upload_id"))).toSet ===
       Set(("C1", "c", 2L), ("C2", "y", 2L)))
+
+    // The same crash and replay for a 2-file application: the orphaned
+    // attempt's change rows carry both files' ids, and the replay under
+    // the SAME ids absorbs all of them.
+    def twoFiles(s: StateStore): Seq[(Long, Long)] = s.applyUploads(
+      Seq(("f3.xlsx", "t3", 1L, 1L, 1L), ("f4.xlsx", "t4", 1L, 2L, 1L)),
+      batch(("C1", "d", 0)).withColumn("_upload_seq", lit(0))
+        .unionByName(batch(("C2", "z", 0), ("C1", "e", 1))
+          .withColumn("_upload_seq", lit(1))))
+    crashes = 1
+    intercept[IllegalStateException](twoFiles(replay))
+    assert(replay.addressChanges.count() === 6L)   // 3 orphaned rows
+    val replay2 = new StateStore(spark, dir.toString, Some(flaky))
+    assert(twoFiles(replay2) === Seq((3L, 1L), (4L, 2L)))
+    // one uploads row per file
+    assert(replay2.uploadsOrdered.collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[String]("filename"))).toSeq ===
+      Seq((4L, "f4.xlsx"), (3L, "f3.xlsx"), (2L, "f2.xlsx"), (1L, "f1.xlsx")))
+    // a NEW upload id appends as usual (cross-upload non-idempotence)
+    assert(upload(replay2, "f5.xlsx", "t5", ("C1", "f", 0)) === Seq((5L, 1L)))
+    // dense change ids, each change row once
+    assert(replay2.addressChanges.orderBy("id").collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[String]("customer_id"),
+       r.getAs[String]("new_address"), r.getAs[Long]("upload_id"))).toSeq ===
+      Seq((1L, "C1", "b", 2L), (2L, "C2", "y", 2L), (3L, "C1", "c", 2L),
+        (4L, "C1", "d", 3L), (5L, "C2", "z", 4L), (6L, "C1", "e", 4L),
+        (7L, "C1", "f", 5L)))
   }
 
   test("no change rows for brand-new customers or unchanged addresses") {
     val s = newStore()
-    assert(s.applyCustomerBatch(batch(("C1", "a", 0)), "t1", 1) === 0)
-    assert(s.applyCustomerBatch(batch(("C1", "a", 0)), "t2", 2) === 0)
-    assert(s.applyCustomerBatch(batch(("C1", "b", 0)), "t3", 3) === 1)
+    assert(upload(s, "f1.xlsx", "t1", ("C1", "a", 0)).head._2 === 0)
+    assert(upload(s, "f2.xlsx", "t2", ("C1", "a", 0)).head._2 === 0)
+    assert(upload(s, "f3.xlsx", "t3", ("C1", "b", 0)).head._2 === 1)
   }
 
-  test("recordUpload: dense driver-side sequence, ordered audit scan") {
+  test("upload ids: dense driver-side sequence, ordered audit scan") {
     val s = newStore()
-    assert(s.recordUpload("f1.xlsx", "2026-01-01T00:00:00", 10, 2, 3) === 1L)
-    assert(s.recordUpload("f2.xlsx", "2026-01-02T00:00:00", 11, 2, 3) === 2L)
-    assert(s.recordUpload("f3.xlsx", "2026-01-03T00:00:00", 12, 2, 3) === 3L)
+    assert(upload(s, "f1.xlsx", "2026-01-01T00:00:00", ("C1", "a", 0))
+      .head._1 === 1L)
+    assert(upload(s, "f2.xlsx", "2026-01-02T00:00:00", ("C1", "a", 0))
+      .head._1 === 2L)
+    assert(upload(s, "f3.xlsx", "2026-01-03T00:00:00", ("C1", "a", 0))
+      .head._1 === 3L)
     assert(s.uploadsOrdered.select("filename").collect()
       .map(_.getString(0)).toSeq === Seq("f3.xlsx", "f2.xlsx", "f1.xlsx"))
   }
 
   test("upsert retains prior upload_id only for untouched customers") {
     val s = newStore()
-    s.applyCustomerBatch(batch(("C1", "a", 0), ("C2", "b", 1)), "t1", 1)
-    s.applyCustomerBatch(batch(("C2", "b2", 0)), "t2", 2)
+    upload(s, "f1.xlsx", "t1", ("C1", "a", 0), ("C2", "b", 1))
+    upload(s, "f2.xlsx", "t2", ("C2", "b2", 0))
     val byId = s.customers.collect().map(r =>
       r.getAs[String]("customer_id") -> r.getAs[Long]("upload_id")).toMap
     assert(byId === Map("C1" -> 1L, "C2" -> 2L))
