@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Results are materialized
   * through the `noop` sink so Catalyst cannot prune the projection/
@@ -147,18 +145,7 @@ object Bench {
     val cpuStart = cpuJiffies()
     val selfStart = subtreeJiffies()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Tolerance for a historical testdata encoding: if events.parquet
-      // ever stores TIMESTAMP(NANOS) again, read it as LongType nanos
-      // (EventOps.eventMs handles Long / TIMESTAMP / TIMESTAMP_NTZ alike;
-      // the conf is a no-op for the current TIMESTAMP_NTZ micros file).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Eager scratch-listener install (round-14 ADVICE): the first sliced
     // query's first slice must count like every other.

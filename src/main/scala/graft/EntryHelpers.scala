@@ -247,7 +247,7 @@ private[graft] object EntryHelpers {
       .join(TextOps.langIdAgg(d).select(col("doc_id"), col("pred_lang")),
         Seq("doc_id"))
       .join(Dedup.exactDedup(d).select("doc_id"), Seq("doc_id"))
-      .where(col("quality_score") >= 0.5 && col("pred_lang") =!= "unknown")
+      .where(Curation.QualityKeep && Curation.LangKnown)
 
   /** The composed corpus-production run — the END-TO-END dress
     * rehearsal of the training-data factory, every stage the SAME
@@ -314,21 +314,17 @@ private[graft] object EntryHelpers {
     //    doc_id aggregate): lang-id hits + classifier logit;
     //  - [[Dedup.curationGramStream]] (ONE persisted 8-gram stream):
     //    consumed by both the dup-span and decontamination screens.
-    // Expression-for-expression identical to the standalone operators
-    // (their scaladocs say which), so the composed output — and its
-    // DuckDB oracle replay — is unchanged. Corpus text is now read by
-    // exactly 6 passes (signals, gate, 8-grams, 3-gram signatures, LM
-    // unigrams + bigrams×2) instead of ~15.
+    // Each pass selects the same named signal definitions the
+    // standalone operators use, the band and the dup/decontamination
+    // screens are the operators' by-length / from-grams forms, and the
+    // gates are [[Curation.curateV3]], shared with [[Epoch.advance]].
+    // Corpus text is read by exactly 6 passes (signals, gate, 8-grams,
+    // 3-gram signatures, LM unigrams + bigrams×2) instead of ~15.
     val holdout = col("doc_id") % 10 === 0
     val sig1 = TextOps.curationDocSignals(d).localCheckpoint()
-    val bounds = sig1.agg(
-      expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY n_tok_split)")
-        .as("_lo"),
-      expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY n_tok_split)")
-        .as("_hi"))
-    val band = sig1.crossJoin(broadcast(bounds))
-      .where(col("n_tok_split") >= col("_lo") &&
-        col("n_tok_split") <= col("_hi"))
+    val lens = sig1.select(col("doc_id"), col("n_tok_split").as("n_tokens"))
+    val band = TextOps.lengthBandFilterByLen(lens,
+        TextOps.lengthBandBoundsByLen(lens))
       .select("doc_id")
     val ex = sig1.groupBy("fingerprint").agg(min("doc_id").as("doc_id"))
       .select("doc_id")
@@ -337,19 +333,8 @@ private[graft] object EntryHelpers {
     val dsc = Dedup.duplicateSpanCoverageFromGrams(
       sig1.select(col("doc_id"), col("n_tok_cov").as("n_tokens")),
       grams8, 8)
-    val cur = sig1.select(col("doc_id"), col("source"), col("quality_score"))
-      .join(band, Seq("doc_id"))
-      .join(TextOps.langClassifierGate(d), Seq("doc_id"))
-      .join(ex, Seq("doc_id"))
-      .join(dsc.select(col("doc_id"), col("dup_frac")), Seq("doc_id"))
-      .join(TextOps.lmScore(d)
-        .select(col("doc_id"), col("avg_prob")), Seq("doc_id"))
-      .where(col("quality_score") >= 0.5 &&
-        col("pred_lang") =!= "unknown" &&
-        col("dup_frac") <= 0.5 && col("avg_prob").isNotNull &&
-        col("clf_keep"))
-      .select(col("doc_id"), col("source"), col("quality_score"))
-      .localCheckpoint()
+    val cur = Curation.curateV3(sig1, band, TextOps.langClassifierGate(d),
+      ex, dsc, TextOps.lmScore(d))
     val clusters = Dedup.connectedComponents(
       Dedup.nearDupPairs(d).select("doc_a", "doc_b"), sig1.select("doc_id"))
     val reps = Dedup.keepByScore(
@@ -376,8 +361,7 @@ private[graft] object EntryHelpers {
       .select(col("doc_id"), col("position"))
       .localCheckpoint()
     val packed = TextOps.packSequencesByLen(
-        sig1.select(col("doc_id"), col("n_tok_split").as("n_tokens"))
-          .join(sh, Seq("doc_id"))
+        lens.join(sh, Seq("doc_id"))
           .select(col("position").as("doc_id"), col("n_tokens")))
       .select(col("doc_id").as("position"), col("n_tokens"),
         col("seq_id"), col("seq_offset"))

@@ -1380,8 +1380,7 @@ private[graft] object EntryQueries {
         // conf a bare size(null) would be -1 and silently deflate the
         // total (same guard as duplicateSpanCoverage).
         sum(when(col("text").isNotNull,
-          size(split(col("text"), " ")).cast("long")))
-          .as("total_tokens"),
+          TextOps.splitTokenCount(col("text")))).as("total_tokens"),
         countDistinct(col("lang")).as("n_langs"),
         countDistinct(col("source")).as("n_sources"),
         // the canonical exact-dup fingerprint — same normalization as
@@ -1548,7 +1547,7 @@ private[graft] object EntryQueries {
           .select(col("doc_id"), col("dup_frac")), Seq("doc_id"))
         .join(TextOps.lmScore(d)
           .select(col("doc_id"), col("avg_prob")), Seq("doc_id"))
-        .where(col("dup_frac") <= 0.5 && col("avg_prob").isNotNull)
+        .where(Curation.DupSpanKeep && Curation.LmScoreable)
         .orderBy("doc_id")
     }),
 
@@ -1617,14 +1616,11 @@ private[graft] object EntryQueries {
           .select(col("doc_id"), col("avg_prob")), Seq("doc_id"), "left")
         .select(col("doc_id"), col("source"),
           when(col("in_band").isNull, lit("length"))
-            .when(col("quality_score").isNull ||
-              col("quality_score") < 0.5, lit("quality"))
-            .when(col("pred_lang").isNull ||
-              col("pred_lang") === "unknown", lit("language"))
+            .when(Curation.rejects(Curation.QualityKeep), lit("quality"))
+            .when(Curation.rejects(Curation.LangKnown), lit("language"))
             .when(col("is_rep").isNull, lit("duplicate"))
-            .when(col("dup_frac").isNull ||
-              col("dup_frac") > 0.5, lit("dup_spans"))
-            .when(col("avg_prob").isNull, lit("unscoreable"))
+            .when(Curation.rejects(Curation.DupSpanKeep), lit("dup_spans"))
+            .when(Curation.rejects(Curation.LmScoreable), lit("unscoreable"))
             .otherwise(lit("kept")).as("verdict"))
         .orderBy("doc_id")
     }),

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit dump: formatted physical plans for every SparkEntry query,
   * written to a markdown file. Used to keep the promises the operators
   * make (broadcast joins broadcast, filters/projections reach the scan,
@@ -15,13 +13,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS_r02.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val plans = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]

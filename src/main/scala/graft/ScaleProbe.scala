@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.{Scratch, Similarity}
 
 /** One-off scale measurement for PARAMETERIZED operator variants — the
@@ -36,13 +34,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val kind = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val (pairsDf, runs, desc) = kind match {
@@ -244,7 +236,7 @@ object ScaleProbe {
         val prodPath = tmpE.resolve("produced").toString
         dE.select(col("doc_id"), col("source"),
             lit(0.5).as("quality_score"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens"))
+            TextOps.splitTokenCount(col("text")).as("n_tokens"))
           .join(TextOps.shuffleOrder(dE.select("doc_id"))
             .select(col("doc_id"), col("position")), Seq("doc_id"))
           .withColumn("seq_id", expr("CAST(position DIV 4 AS BIGINT)"))
@@ -300,7 +292,7 @@ object ScaleProbe {
         // any stage's measured linearity (cache/spill interaction is
         // exactly what per-stage standalone measurement misses).
         import org.apache.spark.sql.functions._
-        import graft.operators.{Dedup, TextOps}
+        import graft.operators.{Curation, Dedup, TextOps}
         val outDir = if (args.length > 2) args(2)
           else java.nio.file.Files
             .createTempDirectory("graft_cprod").toString
@@ -347,11 +339,11 @@ object ScaleProbe {
         }
         val s1b = stage("s1b_quality") {
           TextOps.qualityScore(TextOps.tokenStats(d))
-            .where(col("quality_score") >= 0.5)
+            .where(Curation.QualityKeep)
             .select(col("doc_id"), col("quality_score"))
         }
         val s1c = stage("s1c_lang") {
-          TextOps.langIdAgg(d).where(col("pred_lang") =!= "unknown")
+          TextOps.langIdAgg(d).where(Curation.LangKnown)
             .select("doc_id")
         }
         val s1d = stage("s1d_reps") {
@@ -363,7 +355,7 @@ object ScaleProbe {
               Dedup.duplicateSpanCoverageSliced(d,
                 scratch("graft_cprod_ds"), slices = heavySlices)
             else Dedup.duplicateSpanCoverage(d)
-          cov.where(col("dup_frac") <= 0.5).select("doc_id")
+          cov.where(Curation.DupSpanKeep).select("doc_id")
         }
         val s1f = stage("s1f_lm") {
           val lm =
@@ -371,7 +363,7 @@ object ScaleProbe {
               TextOps.lmScoreSliced(d,
                 scratch("graft_cprod_lm"), slices = heavySlices)
             else TextOps.lmScore(d)
-          lm.where(col("avg_prob").isNotNull).select("doc_id")
+          lm.where(Curation.LmScoreable).select("doc_id")
         }
         val s1g = stage("s1g_clf") {
           TextOps.classifierScore(d).where(col("keep")).select("doc_id")
@@ -439,8 +431,7 @@ object ScaleProbe {
         stage("s6_pack") {
           val packed = TextOps.packSequencesByLen(
               d.select(col("doc_id"),
-                  size(split(col("text"), " ")).cast("long")
-                    .as("n_tokens"))
+                  TextOps.splitTokenCount(col("text")).as("n_tokens"))
                 .join(sh, Seq("doc_id"))
                 .select(col("position").as("doc_id"), col("n_tokens")))
             .select(col("doc_id").as("position"), col("n_tokens"),

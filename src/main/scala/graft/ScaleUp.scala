@@ -85,14 +85,7 @@ object ScaleUp {
     val out = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val tables = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(defaultCpus = 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, src, out, factor, tables)
     spark.stop()

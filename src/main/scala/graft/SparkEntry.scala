@@ -33,6 +33,25 @@ object SparkEntry {
     queries("flagship_rank")(spark, "/root/testdata/sf0.001")
 
 
+  /** The session every main starts from: `local[N]` with N from
+    * `SPARK_GRAFT_CPUS` (default `defaultCpus`), shuffle partitions = N,
+    * UTC session time zone and the UI off. `nanosAsLong` tolerates a
+    * historical testdata encoding: if events.parquet ever stores
+    * TIMESTAMP(NANOS) again it reads as LongType nanos
+    * (EventOps.eventMs handles Long / TIMESTAMP / TIMESTAMP_NTZ alike;
+    * the conf is a no-op for the current TIMESTAMP_NTZ micros file).
+    * Callers add their own configs before `getOrCreate()`.
+    */
+  def localSession(defaultCpus: Int = 4): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+  }
+
   /** Parsed-and-validated `SPARK_GRAFT_ONLY` filter (comma-separated
     * query names) — the single iteration contract shared by the Verify
     * and Bench mains.

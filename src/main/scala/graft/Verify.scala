@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Tolerance for a historical testdata encoding (TIMESTAMP(NANOS) →
-      // LongType); a no-op for the current TIMESTAMP_NTZ micros file.
-      // EventOps.eventMs handles Long / TIMESTAMP / TIMESTAMP_NTZ alike.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.localSession()
       // SPARK_GRAFT_AQE=false runs the gate without adaptive execution —
       // the sweep that proves no result depends on AQE's runtime
       // re-planning (coalesced partitions, demoted joins), only on the
@@ -55,7 +46,6 @@ object Verify {
       .config("spark.sql.codegen.factoryMode",
         if (sys.env.get("SPARK_GRAFT_CODEGEN").contains("false"))
           "NO_CODEGEN" else "FALLBACK")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Eager scratch-listener install (round-14 ADVICE): the first sliced

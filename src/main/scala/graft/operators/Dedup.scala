@@ -411,22 +411,36 @@ object Dedup {
       val par = math.min(slices, math.max(1,
         sys.env.get("SPARK_GRAFT_SLICE_PARALLELISM")
           .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(2)))
+      // Fail fast: the first failing slice cancels the slices' job group
+      // (and its later jobs), queued slices skip, and the pool drains
+      // before the table is dropped. No interrupt: an interrupted
+      // `runJob` returns before its job ends.
+      val sc = spark.sparkContext
+      val group = s"graft_slices_$tbl"
+      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
       try {
-        val jobs = (0 until slices).map { i =>
-          scala.concurrent.Future {
+        for (i <- 0 until slices) done.submit { () =>
+          sc.setJobGroup(group, s"near-dup slice $i", interruptOnCancel = true)
+          try if (!failed.get) {
             val slice = longForm.where(
               pmod(xxhash64(col("band"), col("sig")), lit(slices)) === i)
             verifyJaccard(bandCandidates(slice), sets, sets,
                 "doc_a", "doc_b", threshold)
               .write.mode("overwrite").parquet(s"$pairsDir/slice_$i")
             Scratch.gcIfPressured(spark)  // reclaim this slice's shuffles
-          }
+          } finally sc.clearJobGroup()
         }
-        jobs.foreach(f => scala.concurrent.Await
-          .result(f, scala.concurrent.duration.Duration.Inf))
+        try for (_ <- 0 until slices) done.take().get()
+        catch { case e: java.util.concurrent.ExecutionException =>
+          failed.set(true)
+          sc.cancelJobGroupAndFutureJobs(group)
+          pool.shutdown()
+          pool.awaitTermination(Long.MaxValue,
+            java.util.concurrent.TimeUnit.NANOSECONDS)
+          throw e.getCause
+        }
       } finally pool.shutdown()
       spark.read
         .parquet((0 until slices).map(i => s"$pairsDir/slice_$i"): _*)
@@ -1899,11 +1913,7 @@ object Dedup {
       val grams = tokenGrams(docs, w, textCol, keepPos = true)
         .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("g"))
         .where(pmod(col("g"), lit(slices.toLong)) === k.toLong)
-      val dup = grams.groupBy("g")
-        .agg(min("doc_id").as("_lo"), max("doc_id").as("_hi"))
-        .where(col("_lo") =!= col("_hi"))
-        .select("g")
-      grams.join(dup, Seq("g")).select("doc_id", "pos")
+      grams.join(multiDocWindows(grams), Seq("g")).select("doc_id", "pos")
         .write.mode("overwrite").parquet(s"$workDir/pos_$k")
       // let ContextCleaner reclaim this slice's shuffle files before
       // the next slice starts (the nearDupPairsBandedSliced pattern)
@@ -1929,8 +1939,8 @@ object Dedup {
   /** The corpus-version WINDOW-HASH INDEX: the distinct xxhash64 `w`-
     * token window hashes of `docs` — the artifact that makes the
     * dup-span curation gate incrementally maintainable
-    * ([[duplicateSpanCoverageAgainst]]): at cluster scale it is
-    * materialized to parquet once per corpus version (narrow 8-byte
+    * ([[duplicateSpanCoverageAgainstFromGrams]]): at cluster scale it
+    * is materialized to parquet once per corpus version (narrow 8-byte
     * longs, ~one row per distinct corpus window) and every appended
     * batch joins against the table instead of re-scanning corpus text —
     * the same posture as [[buildSignatureIndex]] for the near-dup
@@ -1941,91 +1951,16 @@ object Dedup {
     tokenGrams(docs, w, textCol)
       .select(xxhash64(col("gram")).as("g")).distinct()
 
-  /** [[duplicateSpanCoverage]] for an appended BATCH against an
-    * existing corpus' [[windowHashIndex]]: a batch position is
-    * duplicated iff its window appears in another BATCH document OR
-    * anywhere in the indexed corpus — exactly the union corpus'
-    * "≥ 2 distinct docs" rule restricted to batch rows, since every
-    * batch position trivially occurs in its own document and the two
-    * doc-id spaces are disjoint. Same spans merge, same coverage
-    * roll-up, same output columns as the full operator.
-    *
-    * Scale: the timed path builds windows for the BATCH only; the
-    * corpus enters through one key-only semi-join against the narrow
-    * index — cost ∝ batch (+ the index scan), never a corpus text
-    * re-read.
-    */
-  def duplicateSpanCoverageAgainst(batch: DataFrame, index: DataFrame,
-                                   w: Int = 8,
-                                   textCol: String = "text"): DataFrame = {
-    val grams = tokenGrams(batch, w, textCol, keepPos = true)
-      .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // within-batch: window in ≥ 2 distinct batch docs (min ≠ max — the
-    // expand-free distinct-doc test, as in duplicatedPositions)
-    val dupBatch = grams.groupBy("g")
-      .agg(min("doc_id").as("_lo"), max("doc_id").as("_hi"))
-      .where(col("_lo") =!= col("_hi"))
-      .select("g")
-    // TWO position joins unioned, NOT one join against
-    // `(dupBatch ∪ index).distinct()`: the index is corpus-window-sized
-    // and already distinct ([[windowHashIndex]]'s contract), and the
-    // re-distinct form pushed it across TWO exchanges (the distinct's
-    // and the join's) — measured 2× the whole operator's shuffle at the
-    // sf10 epoch probe. Here the index crosses exactly ONE exchange
-    // (the join's; on the bucketed-by-g cluster layout, zero). The
-    // final distinct dedups positions whose window is hot on BOTH
-    // sides, over batch-position-sized rows only.
-    val hits = grams.join(dupBatch, Seq("g")).select("doc_id", "pos")
-      .unionAll(
-        grams.join(index.select(col("g")), Seq("g"))
-          .select("doc_id", "pos"))
-      .distinct()
-    coverageFromSpans(batch, spansFromPositions(hits, w), w, textCol)
-  }
-
   /** The corpus-version HOLDOUT-GRAM INDEX: distinct xxhash64 `n`-gram
     * hashes of the holdout slice of `docs` — the decontamination
     * counterpart of [[windowHashIndex]], consumed by
-    * [[decontaminateAgainst]] so an appended batch is screened against
-    * the full holdout without re-reading corpus text.
+    * [[decontaminationFlaggedAgainst]] so an appended batch is screened
+    * against the full holdout without re-reading corpus text.
     */
   def holdoutGramIndex(docs: DataFrame, holdout: Column, n: Int = 8,
                        textCol: String = "text"): DataFrame =
     tokenGrams(docs.where(holdout), n, textCol)
       .select(xxhash64(col("gram")).as("g")).distinct()
-
-  /** [[decontaminate]] for an appended BATCH against an existing
-    * corpus' [[holdoutGramIndex]]: drop batch docs sharing any `n`-gram
-    * with the UNION's holdout slice — the persisted corpus-version
-    * index plus the batch's OWN holdout rows (computed live) — and the
-    * batch holdout rows themselves. Equivalent to
-    * `decontaminate(union, holdout)` restricted to batch rows for
-    * `minShared = 1` (gram-set membership is all that matters there);
-    * per-pair `n_shared` thresholds above 1 need the pairwise overlap
-    * scan and deliberately stay on [[contaminationOverlap]].
-    */
-  def decontaminateAgainst(batch: DataFrame, holdout: Column,
-                           index: DataFrame, n: Int = 8,
-                           textCol: String = "text"): DataFrame = {
-    val grams = tokenGrams(batch, n, textCol, Seq("_h" -> holdout))
-      .select(col("doc_id"), col("_h"), xxhash64(col("gram")).as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Same one-exchange-per-index rule as
-    // [[duplicateSpanCoverageAgainst]]: the index is already distinct
-    // ([[holdoutGramIndex]]), so it joins directly instead of riding a
-    // union-distinct; the flagged set dedups over batch-doc-sized rows.
-    val flagged = grams.where(!col("_h"))
-      .join(grams.where(col("_h")).select(col("g")).distinct(), Seq("g"))
-      .select("doc_id")
-      .unionAll(
-        grams.where(!col("_h"))
-          .join(index.select(col("g")), Seq("g"))
-          .select("doc_id"))
-      .distinct()
-    batch.where(!holdout).join(flagged, Seq("doc_id"), "left_anti")
-  }
 
   /** Per-document roll-up of [[duplicateSpans]]: span count, duplicated
     * token count and coverage fraction (a single IEEE division of exact
@@ -2045,12 +1980,7 @@ object Dedup {
                                 w: Int, textCol: String): DataFrame =
     coverageFromSpansByLen(
       docs.select(col("doc_id"),
-        // Explicit null for null texts: Spark's non-ANSI size(null) is -1
-        // (legacy sizeOfNull), which would emit n_tokens = -1 and
-        // dup_frac = -0.0 where the oracle's len(NULL) is NULL.
-        when(col(textCol).isNull, lit(null).cast("long"))
-          .otherwise(size(split(lower(col(textCol)), " ")).cast("long"))
-          .as("n_tokens")),
+        TextOps.coverageTokenCount(col(textCol)).as("n_tokens")),
       allSpans)
 
   /** [[coverageFromSpans]] from an already-computed (doc_id, n_tokens)
@@ -2091,39 +2021,49 @@ object Dedup {
         xxhash64(col("gram")).as("g"))
 
   /** [[duplicateSpanCoverage]] over a shared [[curationGramStream]]
-    * (round 14): identical dup test (window in ≥ 2 distinct docs as
-    * min ≠ max), identical island merge and roll-up — the gram build
-    * and the coverage denominator just come from the chain's shared
-    * passes instead of two more corpus text scans. The `_h` column is
-    * ignored here; positions include holdout docs exactly as the
-    * standalone operator's do.
+    * (round 14): the same [[multiDocWindows]] dup test, island merge and
+    * roll-up — the gram build and the coverage denominator just come
+    * from the chain's shared passes instead of two more corpus text
+    * scans. The `_h` column is ignored here; positions include holdout
+    * docs exactly as the standalone operator's do.
     */
   private[graft] def duplicateSpanCoverageFromGrams(lens: DataFrame,
                                                     grams: DataFrame,
                                                     w: Int): DataFrame = {
     val g = grams.select("doc_id", "pos", "g")
-    val dup = g.groupBy("g")
-      .agg(min("doc_id").as("_lo"), max("doc_id").as("_hi"))
-      .where(col("_lo") =!= col("_hi"))
-      .select("g")
-    val hits = g.join(dup, Seq("g")).select("doc_id", "pos")
+    val hits = g.join(multiDocWindows(g), Seq("g")).select("doc_id", "pos")
     coverageFromSpansByLen(lens, spansFromPositions(hits, w))
   }
 
-  /** [[duplicateSpanCoverageAgainst]] over a shared
-    * [[curationGramStream]] (round 14): same two position joins
-    * (within-batch dup windows ∪ index hits), same final distinct and
-    * roll-up — one batch gram build instead of two.
+  /** [[duplicateSpanCoverage]] for an appended BATCH's shared
+    * [[curationGramStream]] against an existing corpus'
+    * [[windowHashIndex]]: a batch position is duplicated iff its window
+    * appears in another BATCH document OR anywhere in the indexed
+    * corpus — exactly the union corpus' "≥ 2 distinct docs" rule
+    * restricted to batch rows, since every batch position trivially
+    * occurs in its own document and the two doc-id spaces are disjoint
+    * (DedupSpec pins `duplicateSpanCoverage(batch ∪ corpus)` restricted
+    * to batch doc ids). Same spans merge, same coverage roll-up, same
+    * output columns as the full operator.
+    *
+    * Scale: windows are built for the BATCH only; the corpus enters
+    * through one key-only semi-join against the narrow index — cost ∝
+    * batch (+ the index scan), never a corpus text re-read.
     */
   private[graft] def duplicateSpanCoverageAgainstFromGrams(
       lens: DataFrame, grams: DataFrame, index: DataFrame,
       w: Int): DataFrame = {
     val g = grams.select("doc_id", "pos", "g")
-    val dupBatch = g.groupBy("g")
-      .agg(min("doc_id").as("_lo"), max("doc_id").as("_hi"))
-      .where(col("_lo") =!= col("_hi"))
-      .select("g")
-    val hits = g.join(dupBatch, Seq("g")).select("doc_id", "pos")
+    // TWO position joins unioned, NOT one join against
+    // `(dupBatch ∪ index).distinct()`: the index is corpus-window-sized
+    // and already distinct ([[windowHashIndex]]'s contract), and the
+    // re-distinct form pushed it across TWO exchanges (the distinct's
+    // and the join's) — measured 2× the whole operator's shuffle at the
+    // sf10 epoch probe. Here the index crosses exactly ONE exchange
+    // (the join's; on the bucketed-by-g cluster layout, zero). The
+    // final distinct dedups positions whose window is hot on BOTH
+    // sides, over batch-position-sized rows only.
+    val hits = g.join(multiDocWindows(g), Seq("g")).select("doc_id", "pos")
       .unionAll(
         g.join(index.select(col("g")), Seq("g"))
           .select("doc_id", "pos"))
@@ -2140,28 +2080,40 @@ object Dedup {
     * Gram-set membership is all a minShared = 1 screen needs, so the
     * (doc_id, holdout_id) pair aggregate is skipped outright.
     */
-  private[graft] def decontaminationFlagged(grams: DataFrame): DataFrame = {
-    val dist = grams.select(col("doc_id"), col("_h"), col("g")).distinct()
-    dist.where(!col("_h")).select("doc_id", "g")
-      .join(dist.where(col("_h")).select("g").distinct(), Seq("g"))
-      .select("doc_id").distinct()
-  }
+  private[graft] def decontaminationFlagged(grams: DataFrame): DataFrame =
+    holdoutHits(grams, None)
 
-  /** [[decontaminateAgainst]]'s flagged set over a shared
-    * [[curationGramStream]] (round 14): within-batch holdout hits ∪
-    * index hits, identical to the standalone operator's two
-    * one-exchange-per-index joins.
+  /** [[decontaminationFlagged]] for an appended BATCH's shared
+    * [[curationGramStream]] against an existing corpus'
+    * [[holdoutGramIndex]]: flag batch docs sharing any `n`-gram with the
+    * UNION's holdout slice — the persisted corpus-version index plus the
+    * batch's OWN holdout rows. The survivors (non-holdout batch rows
+    * minus this set) equal `decontaminate(batch ∪ corpus, holdout)`
+    * restricted to batch rows for `minShared = 1` (DedupSpec pins it);
+    * per-pair `n_shared` thresholds above 1 need the pairwise overlap
+    * scan and deliberately stay on [[contaminationOverlap]].
     */
   private[graft] def decontaminationFlaggedAgainst(grams: DataFrame,
                                                    index: DataFrame)
-      : DataFrame = {
+      : DataFrame =
+    holdoutHits(grams, Some(index))
+
+  /** Non-holdout doc_ids of a [[curationGramStream]] sharing a gram with
+    * its own holdout rows, plus (with an index) with the holdout-gram
+    * index — the one holdout-hit expression of both decontamination
+    * screens. The index is already distinct ([[holdoutGramIndex]]), so
+    * it joins directly (one exchange) instead of riding a union-distinct;
+    * the final distinct runs over batch-doc-sized rows.
+    */
+  private def holdoutHits(grams: DataFrame,
+                          index: Option[DataFrame]): DataFrame = {
     val dist = grams.select(col("doc_id"), col("_h"), col("g")).distinct()
     val corpus = dist.where(!col("_h")).select("doc_id", "g")
-    corpus
+    val own = corpus
       .join(dist.where(col("_h")).select("g").distinct(), Seq("g"))
       .select("doc_id")
-      .unionAll(
-        corpus.join(index.select(col("g")), Seq("g")).select("doc_id"))
+    index.fold(own)(ix => own.unionAll(
+        corpus.join(ix.select(col("g")), Seq("g")).select("doc_id")))
       .distinct()
   }
 
@@ -2219,15 +2171,20 @@ object Dedup {
     val grams = tokenGrams(docs, w, textCol, keepPos = true)
       .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("g"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // "≥ 2 distinct docs" as min ≠ max over occurrences: one plain
-    // hash aggregate — countDistinct would plan an Expand that doubles
-    // every window row before the shuffle (the column_stats lesson).
-    val dup = grams.groupBy("g")
+    grams.join(multiDocWindows(grams), Seq("g")).select("doc_id", "pos")
+  }
+
+  /** The window hashes `g` of a (doc_id, g, …) frame that occur in ≥ 2
+    * distinct documents — the one "duplicated window" test of every
+    * dup-span form. Written as min ≠ max over occurrences: one plain
+    * hash aggregate — countDistinct would plan an Expand that doubles
+    * every window row before the shuffle (the column_stats lesson).
+    */
+  private def multiDocWindows(grams: DataFrame): DataFrame =
+    grams.groupBy("g")
       .agg(min("doc_id").as("_lo"), max("doc_id").as("_hi"))
       .where(col("_lo") =!= col("_hi"))
       .select("g")
-    grams.join(dup, Seq("g")).select("doc_id", "pos")
-  }
 
   /** SimHash near-duplicate pairs: 64-bit signatures, banded into four
     * 16-bit chunks. By pigeonhole, any pair within Hamming distance 3

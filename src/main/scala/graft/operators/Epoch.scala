@@ -108,12 +108,13 @@ object Epoch {
     // (one token-explode aggregate for lang-id + classifier), and one
     // persisted [[Dedup.curationGramStream]] feeding BOTH batch-vs-
     // index screens — instead of one batch scan + tokenization per
-    // gate. Expression-identical to the standalone operators; same
-    // rows, same oracle.
+    // gate. The passes select the standalone operators' named signal
+    // definitions, the band is [[TextOps.lengthBandFilterByLen]] against
+    // the frozen bounds, and the gates are [[Curation.curateV3]], shared
+    // with the factory.
     val sig1 = TextOps.curationDocSignals(batch).localCheckpoint()
-    val band = sig1.crossJoin(broadcast(base.lengthBounds))
-      .where(col("n_tok_split") >= col("_lo") &&
-        col("n_tok_split") <= col("_hi"))
+    val lens = sig1.select(col("doc_id"), col("n_tok_split").as("n_tokens"))
+    val band = TextOps.lengthBandFilterByLen(lens, base.lengthBounds)
       .select("doc_id")
     // exact dedup: batch-internal representative AND unseen fingerprint
     val ex = sig1.groupBy("fingerprint").agg(min("doc_id").as("doc_id"))
@@ -123,11 +124,9 @@ object Epoch {
     val grams8 = Dedup.curationGramStream(batch, 8, holdout)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dsc = Dedup.duplicateSpanCoverageAgainstFromGrams(
-        sig1.select(col("doc_id"), col("n_tok_cov").as("n_tokens")),
-        grams8, base.windowIndex, 8)
-      .select(col("doc_id"), col("dup_frac"))
+      sig1.select(col("doc_id"), col("n_tok_cov").as("n_tokens")),
+      grams8, base.windowIndex, 8)
     val lm = TextOps.lmScoreAgainst(batch, base.lmRatio)
-      .select(col("doc_id"), col("avg_prob"))
     // Multi-consumed narrow stage boundaries below are eagerly
     // localCheckpoint'ed (round 13, guide §5 / §1.2) — mirroring the
     // corpusProductionStages fix: `cur` feeds the rep-keep AND the
@@ -136,18 +135,8 @@ object Epoch {
     // truncation the printed plan re-nested the whole batch curation +
     // delta pair search once per consumer (1,446 Exchange nodes at
     // sf0.1; measured 43.1 s idle min-of-2). Same rows, same oracle.
-    val cur = sig1.select(col("doc_id"), col("source"), col("quality_score"))
-      .join(band, Seq("doc_id"))
-      .join(TextOps.langClassifierGate(batch), Seq("doc_id"))
-      .join(ex, Seq("doc_id"))
-      .join(dsc, Seq("doc_id"))
-      .join(lm, Seq("doc_id"))
-      .where(col("quality_score") >= 0.5 &&
-        col("pred_lang") =!= "unknown" &&
-        col("dup_frac") <= 0.5 && col("avg_prob").isNotNull &&
-        col("clf_keep"))
-      .select(col("doc_id"), col("source"), col("quality_score"))
-      .localCheckpoint()
+    val cur = Curation.curateV3(sig1, band,
+      TextOps.langClassifierGate(batch), ex, dsc, lm)
     // ---- near-dup: existing wins, batch-only clusters keep best ----
     val delta = Dedup.updatePairGraphDelta(batch, base.sigIndex)
     val newLabels = Dedup.relabelTouched(base.labels, base.edges, delta,
@@ -199,9 +188,7 @@ object Epoch {
     val sh = TextOps.shuffleOrder(admitted.select("doc_id"))
       .select(col("doc_id"), col("position").as("_bpos"))
       .localCheckpoint()
-    val tok = sig1
-      .select(col("doc_id"), col("n_tok_split").as("n_tokens"))
-      .join(sh, Seq("doc_id"))
+    val tok = lens.join(sh, Seq("doc_id"))
     val pk = TextOps.packSequencesByLen(
         tok.select(col("_bpos").as("doc_id"), col("n_tokens")), seqLen)
       .select(col("doc_id").as("_bpos"), col("n_tokens"),

@@ -17,6 +17,37 @@ object TextOps {
   /** Whitespace tokens of the raw text. */
   def tokens(text: Column): Column = split(text, " ")
 
+  /** Whitespace token count as a long: the length of the band, pack,
+    * sample and card stages, legacy `size(null) = -1` included.
+    */
+  private[graft] def splitTokenCount(text: Column): Column =
+    size(split(text, " ")).cast("long")
+
+  /** The dup-span coverage denominator: lowercased token count, null for
+    * a null text (where a bare size(null) = -1 would give dup_frac = -0.0
+    * against the oracle's NULL).
+    */
+  private[graft] def coverageTokenCount(text: Column): Column =
+    when(text.isNull, lit(null).cast("long"))
+      .otherwise(splitTokenCount(lower(text)))
+
+  /** (doc_id, n_tokens) for the by-length band and pack forms. */
+  private def splitLengths(docs: DataFrame, textCol: String): DataFrame =
+    docs.select(col("doc_id"), splitTokenCount(col(textCol)).as("n_tokens"))
+
+  // One TokenSummary eval as `_ts`, and the columns [[tokenStats]] and
+  // [[curationDocSignals]] both derive from it.
+  private def tokenSummary(text: Column): Column =
+    graft.functions.TokenSummary(text, EnStopwords).as("_ts")
+  private def summaryTokens: Column =
+    col("_ts.n_tokens").cast("int").as("n_tokens")
+  private def summaryStopwordRatio: Column =
+    (col("_ts.stop_hits").cast("double") / col("_ts.n_tokens"))
+      .as("stopword_ratio")
+  private def summaryDistinctRatio: Column =
+    (col("_ts.n_distinct").cast("double") / col("_ts.n_tokens"))
+      .as("distinct_ratio")
+
   /** GPT-2-style pre-tokenizer approximation: word pieces are letter
     * runs, digit runs, or punctuation runs — the "BPE-ish regex" count
     * that tracks model-token counts far better than whitespace splits on
@@ -41,20 +72,17 @@ object TextOps {
     // in SCALING.md batch 18a. `keep` passes narrow columns (e.g.
     // `source`) through the same single text pass so callers building a
     // per-doc manifest need no post-hoc doc_id join.
-    docs.select(Seq(col("doc_id"), col(textCol),
-        graft.functions.TokenSummary(col(textCol), EnStopwords).as("_ts"))
+    docs.select(Seq(col("doc_id"), col(textCol), tokenSummary(col(textCol)))
         ++ keep.map(col): _*)
       .select(Seq(col("doc_id")) ++ keep.map(col) ++ Seq(
         length(col(textCol)).as("n_chars"),
-        col("_ts.n_tokens").cast("int").as("n_tokens"),
+        summaryTokens,
         col("_ts.n_word_pieces").cast("int").as("n_word_pieces"),
         col("_ts.n_distinct").cast("int").as("n_distinct"),
         (col("_ts.tok_chars").cast("double") / col("_ts.n_tokens"))
           .as("avg_token_len"),
-        (col("_ts.stop_hits").cast("double") / col("_ts.n_tokens"))
-          .as("stopword_ratio"),
-        (col("_ts.n_distinct").cast("double") / col("_ts.n_tokens"))
-          .as("distinct_ratio")): _*)
+        summaryStopwordRatio,
+        summaryDistinctRatio): _*)
   }
 
   /** Equi-depth token-count histogram: rank every document into one of
@@ -181,11 +209,16 @@ object TextOps {
   def langIdAgg(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val toks = docs.select(col("doc_id"),
       explode_outer(tokens(lower(col(textCol)))).as("tok"))
+    withPredLang(toks.groupBy("doc_id")
+      .agg(langHitSums.head, langHitSums.tail: _*))
+  }
+
+  /** Per-language stopword-hit sums over an exploded `tok` column. */
+  private def langHitSums: Seq[Column] = {
     def hits(words: Seq[String]) =
       sum(when(col("tok").isin(words: _*), 1).otherwise(0)).cast("int")
-    withPredLang(toks.groupBy("doc_id").agg(
-      hits(EnStopwords).as("en_hits"), hits(DeStopwords).as("de_hits"),
-      hits(FrStopwords).as("fr_hits"), hits(EsStopwords).as("es_hits")))
+    Seq(hits(EnStopwords).as("en_hits"), hits(DeStopwords).as("de_hits"),
+      hits(FrStopwords).as("fr_hits"), hits(EsStopwords).as("es_hits"))
   }
 
   /** Gopher-style repetition signals per document — the "is this document
@@ -513,9 +546,10 @@ object TextOps {
     * error) when N makes exact sorting unreasonable.
     */
   def lengthBandFilter(docs: DataFrame, lo: Double = 0.05, hi: Double = 0.95,
-                       textCol: String = "text"): DataFrame =
-    lengthBandFilterWithBounds(docs, lengthBandBounds(docs, lo, hi, textCol),
-      textCol)
+                       textCol: String = "text"): DataFrame = {
+    val lens = splitLengths(docs, textCol)
+    lengthBandFilterByLen(lens, lengthBandBoundsByLen(lens, lo, hi))
+  }
 
   /** The band's percentile bounds as a 1-row (_lo, _hi) frame — split
     * out of [[lengthBandFilter]] so an epoch-advance pipeline can
@@ -530,23 +564,27 @@ object TextOps {
   def lengthBandBounds(docs: DataFrame, lo: Double = 0.05,
                        hi: Double = 0.95,
                        textCol: String = "text"): DataFrame =
-    docs.withColumn("n_tokens",
-        size(split(col(textCol), " ")).cast("long"))
-      .agg(
-        expr(s"percentile_disc($lo) WITHIN GROUP (ORDER BY n_tokens)")
-          .as("_lo"),
-        expr(s"percentile_disc($hi) WITHIN GROUP (ORDER BY n_tokens)")
-          .as("_hi"))
+    lengthBandBoundsByLen(splitLengths(docs, textCol), lo, hi)
 
-  /** [[lengthBandFilter]] against an externally supplied (possibly
-    * frozen) bounds frame. The bounds attach as a broadcast 1-row
-    * frame — no driver collect.
+  /** [[lengthBandBounds]] over a (doc_id, n_tokens) frame — the fused
+    * chains' form ([[packSequencesByLen]]'s posture).
     */
-  def lengthBandFilterWithBounds(docs: DataFrame, bounds: DataFrame,
-                                 textCol: String = "text"): DataFrame =
-    docs.withColumn("n_tokens",
-        size(split(col(textCol), " ")).cast("long"))
-      .crossJoin(broadcast(bounds))
+  private[graft] def lengthBandBoundsByLen(lens: DataFrame,
+                                           lo: Double = 0.05,
+                                           hi: Double = 0.95): DataFrame =
+    lens.agg(
+      expr(s"percentile_disc($lo) WITHIN GROUP (ORDER BY n_tokens)")
+        .as("_lo"),
+      expr(s"percentile_disc($hi) WITHIN GROUP (ORDER BY n_tokens)")
+        .as("_hi"))
+
+  /** [[lengthBandFilter]] over a (doc_id, n_tokens) frame against a
+    * supplied (possibly frozen) bounds frame, attached as a broadcast
+    * 1-row frame — no driver collect.
+    */
+  private[graft] def lengthBandFilterByLen(lens: DataFrame,
+                                           bounds: DataFrame): DataFrame =
+    lens.crossJoin(broadcast(bounds))
       .where(col("n_tokens") >= col("_lo") && col("n_tokens") <= col("_hi"))
       .select(col("doc_id"), col("n_tokens"))
 
@@ -570,10 +608,7 @@ object TextOps {
   def packSequences(docs: DataFrame, seqLen: Int = 2048,
                     partitions: Int = 32,
                     textCol: String = "text"): DataFrame =
-    packSequencesByLen(
-      docs.select(col("doc_id"),
-        size(split(col(textCol), " ")).cast("long").as("n_tokens")),
-      seqLen, partitions)
+    packSequencesByLen(splitLengths(docs, textCol), seqLen, partitions)
 
   /** [[packSequences]] from an already-computed (doc_id, n_tokens)
     * frame — the form composed pipelines call so the length column is
@@ -1010,6 +1045,12 @@ object TextOps {
   private def featBucket(tok: Column): Column =
     conv(substring(md5(tok), 1, 3), 16, 10).cast("long")
 
+  /** The fixed literal classifier weight `((b·37 + 11) mod 201) − 100`
+    * of a token's [[featBucket]] b.
+    */
+  private def featWeight(tok: Column): Column =
+    (featBucket(tok) * lit(37L) + lit(11L)) % 201L - 100L
+
   /** Quality-classifier inference — the CCNet/fastText slot in a real
     * curation stack: a hashed-feature LINEAR model scores every document,
     * and the curation gate thresholds the logit. Features are bag-of-
@@ -1042,9 +1083,7 @@ object TextOps {
     val scored = docs
       .select(col("doc_id"),
         explode(split(lower(col(textCol)), " ")).as("tok"))
-      .select(col("doc_id"),
-        (featBucket(col("tok")) * lit(37L) + lit(11L)).as("_wb"))
-      .select(col("doc_id"), (col("_wb") % 201L - 100L).as("w"))
+      .select(col("doc_id"), featWeight(col("tok")).as("w"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"), sum("w").as("logit_fp"))
     docs.select(col("doc_id"))
@@ -1089,7 +1128,7 @@ object TextOps {
     val slice = docs.where(col("doc_id") % 5 === 0)
     val labeled = qualityScore(tokenStats(slice, textCol))
       .where(col("quality_score").isNotNull)
-      .select(col("doc_id"), (col("quality_score") >= 0.5).as("_pos"))
+      .select(col("doc_id"), Curation.QualityKeep.as("_pos"))
     val feats = slice
       .select(col("doc_id"),
         explode(split(lower(col(textCol)), " ")).as("tok"))
@@ -1159,7 +1198,7 @@ object TextOps {
     val holdout = docs.where(col("doc_id") % 5 =!= 0)
     val labels = qualityScore(tokenStats(holdout, textCol))
       .where(col("quality_score").isNotNull)
-      .select(col("doc_id"), (col("quality_score") >= 0.5).as("label"))
+      .select(col("doc_id"), Curation.QualityKeep.as("label"))
     classifierScoreTrained(docs, textCol)
       .select(col("doc_id"), col("keep"))
       .join(labels, Seq("doc_id"))
@@ -1801,9 +1840,7 @@ object TextOps {
     */
   def weightedSample(docs: DataFrame, k: Int = 50,
                      textCol: String = "text"): DataFrame =
-    docs
-      .select(col("doc_id"),
-        size(split(col(textCol), " ")).cast("long").as("n_tokens"))
+    splitLengths(docs, textCol)
       .where(col("n_tokens") > 0)
       .withColumn("_h",
         expr("conv(substring(md5(cast(doc_id as string)), 1, 12), 16, 10)")
@@ -1973,19 +2010,17 @@ object TextOps {
     * composed form paid a separate scan + tokenization per gate
     * (quality stats, exact-dedup fingerprint, length-band tokens,
     * coverage denominator, pack length ≈ 5 corpus text passes).
-    * Column-for-column the expressions are copied verbatim from the
-    * standalone operators so the fused chain's output is bit-identical:
-    *  - `n_tokens`, `quality_score`: [[tokenStats]] → [[qualityScore]]
-    *    (the same [[graft.functions.TokenSummary]] eval + IEEE
-    *    arithmetic),
+    * Each column selects the same named definition the standalone
+    * operator uses, so the fused chain's output is bit-identical:
+    *  - `n_tokens`, `quality_score`: the [[tokenSummary]] columns
+    *    [[tokenStats]] reads, then [[qualityScore]] itself,
     *  - `fingerprint`: [[fingerprint]] (the [[graft.operators.Dedup
     *    .exactDedup]] key),
-    *  - `n_tok_split`: `size(split(text, " "))` — [[lengthBandBounds]]'
-    *    / [[lengthBandFilterWithBounds]]' / [[packSequences]]' length
-    *    (legacy `size(null) = -1` semantics included),
-    *  - `n_tok_cov`: the dup-span coverage denominator with its
-    *    explicit null for null texts ([[graft.operators.Dedup
-    *    .duplicateSpanCoverage]]'s `coverageFromSpans`).
+    *  - `n_tok_split`: [[splitTokenCount]], the length of
+    *    [[lengthBandFilterByLen]] / [[lengthBandBoundsByLen]] /
+    *    [[packSequencesByLen]],
+    *  - `n_tok_cov`: [[coverageTokenCount]], the
+    *    [[graft.operators.Dedup.duplicateSpanCoverage]] denominator.
     * Callers `localCheckpoint` the result (doc-count-sized narrow rows)
     * so every gate join reads it instead of re-scanning corpus text.
     */
@@ -1994,18 +2029,12 @@ object TextOps {
       : DataFrame =
     qualityScore(docs
       .select(col("doc_id"), col("source"), col(textCol),
-        graft.functions.TokenSummary(col(textCol), EnStopwords).as("_ts"))
+        tokenSummary(col(textCol)))
       .select(col("doc_id"), col("source"),
-        col("_ts.n_tokens").cast("int").as("n_tokens"),
-        (col("_ts.stop_hits").cast("double") / col("_ts.n_tokens"))
-          .as("stopword_ratio"),
-        (col("_ts.n_distinct").cast("double") / col("_ts.n_tokens"))
-          .as("distinct_ratio"),
+        summaryTokens, summaryStopwordRatio, summaryDistinctRatio,
         fingerprint(col(textCol)).as("fingerprint"),
-        size(split(col(textCol), " ")).cast("long").as("n_tok_split"),
-        when(col(textCol).isNull, lit(null).cast("long"))
-          .otherwise(size(split(lower(col(textCol)), " ")).cast("long"))
-          .as("n_tok_cov")))
+        splitTokenCount(col(textCol)).as("n_tok_split"),
+        coverageTokenCount(col(textCol)).as("n_tok_cov")))
       .select("doc_id", "source", "n_tokens", "quality_score",
         "fingerprint", "n_tok_split", "n_tok_cov")
 
@@ -2018,8 +2047,9 @@ object TextOps {
     * token stream ([[tokens]] IS `split(_, " ")`).
     *
     * Gate equivalence: `pred_lang` is [[withPredLang]] over the same
-    * integer hit sums; `clf_keep` is [[classifierScore]]'s
-    * `logit_fp > 0` — for a null-text document the outer explode's
+    * [[langHitSums]]; `clf_keep` is [[classifierScore]]'s
+    * `logit_fp > 0` over the same [[featWeight]] — for a null-text
+    * document the outer explode's
     * single null token contributes 0 hits and a null weight sum
     * (`featBucket(null)` is null, sum skips it, coalesce restores the
     * standalone left-join's 0), so both gates reject exactly the same
@@ -2030,14 +2060,9 @@ object TextOps {
       : DataFrame = {
     val toks = docs.select(col("doc_id"),
       explode_outer(tokens(lower(col(textCol)))).as("tok"))
-    def hits(words: Seq[String]) =
-      sum(when(col("tok").isin(words: _*), 1).otherwise(0)).cast("int")
-    val agg = toks.groupBy("doc_id").agg(
-      hits(EnStopwords).as("en_hits"), hits(DeStopwords).as("de_hits"),
-      hits(FrStopwords).as("fr_hits"), hits(EsStopwords).as("es_hits"),
-      coalesce(
-        sum((featBucket(col("tok")) * lit(37L) + lit(11L)) % 201L - 100L),
-        lit(0L)).as("logit_fp"))
+    val agg = toks.groupBy("doc_id").agg(langHitSums.head,
+      langHitSums.tail :+
+        coalesce(sum(featWeight(col("tok"))), lit(0L)).as("logit_fp"): _*)
     withPredLang(agg)
       .select(col("doc_id"), col("pred_lang"),
         (col("logit_fp") > 0L).as("clf_keep"))

@@ -147,6 +147,49 @@ class DedupSpec extends AnyFunSuite {
     assert(k1 === oneShot)
   }
 
+  test("nearDupPairsBandedSliced fails fast: the first failing slice " +
+       "ends every other slice before the bucketed table is dropped") {
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.failslice.impl",
+      classOf[FailSliceFs].getName)
+    sc.hadoopConfiguration.setBoolean("fs.failslice.impl.disable.cache", true)
+    // tasks that failed reading the dropped signature table
+    val readDropped = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        e.reason match {
+          case f: org.apache.spark.ExceptionFailure
+              if f.toErrorString.contains("graft_sigsets_") =>
+            readDropped.add(f.toErrorString.take(300))
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val corpus = spark.read
+      .parquet("/root/testdata/sf0.001/documents.parquet")
+    val work = java.nio.file.Files.createTempDirectory("graft_failslice")
+    try {
+      val e = intercept[Exception](Dedup.nearDupPairsBandedSliced(
+        corpus, s"failslice://$work", slices = 8))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("slice_0")),
+        s"the first slice's error must surface: $e")
+      assert(!spark.catalog.listTables().collect()
+        .exists(_.name.startsWith("graft_sigsets_")))
+      graft.operators.Scratch.drainListenerBus(sc)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+      // and nothing of the call runs on against the dropped table
+      Thread.sleep(1000L)
+      graft.operators.Scratch.drainListenerBus(sc)
+      assert(readDropped.isEmpty, readDropped.toString)
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.hadoopConfiguration.unset("fs.failslice.impl")
+      sc.hadoopConfiguration.unset("fs.failslice.impl.disable.cache")
+    }
+  }
+
   test("containmentPairs: a short doc embedded in a long one scores " +
        "containment ~1 on the short side with low Jaccard") {
     val short0 = "alpha beta gamma delta epsilon zeta eta theta"
@@ -354,24 +397,31 @@ class DedupSpec extends AnyFunSuite {
     val keptFused = d.where(!hold).select("doc_id").collect()
       .map(_.getLong(0)).toSet -- flagged
     assert(keptFused === keptStandalone)
-    // batch-vs-index forms over a frozen corpus index
+    // batch-vs-index forms over a frozen corpus index: the full
+    // operator over batch ∪ corpus, restricted to the batch's rows.
+    // Doc 120 leaks into batch doc 2 only through the index.
     val corpus = Seq(
       (100L, "a b c d e f g h i j corpus member text here"),
-      (110L, "holdout corpus doc q r s t u v w x y z1 z2 z3 end"))
+      (110L, "holdout corpus doc q r s t u v w x y z1 z2 z3 end"),
+      (120L, "leak unrelated words only here nothing shared at all"))
       .toDF("doc_id", "text")
+    val union = d.unionByName(corpus)
+    def batchRows(df: org.apache.spark.sql.DataFrame) =
+      df.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
     val wIdx = Dedup.windowHashIndex(corpus)
     assert(dump(Dedup.duplicateSpanCoverageAgainstFromGrams(
         lens, grams, wIdx, 8)) ===
-      dump(Dedup.duplicateSpanCoverageAgainst(d, wIdx)))
-    val hIdx = Dedup.holdoutGramIndex(corpus, col("doc_id") % 10 === 0)
-    val keptAgainstStandalone = Dedup.decontaminateAgainst(d, hold, hIdx)
+      dump(batchRows(Dedup.duplicateSpanCoverage(union))))
+    val hIdx = Dedup.holdoutGramIndex(corpus, hold)
+    val keptUnion = batchRows(Dedup.decontaminate(union, hold))
       .collect().map(_.getAs[Long]("doc_id")).toSet
     val flaggedAgainst = Dedup
       .decontaminationFlaggedAgainst(grams, hIdx)
       .collect().map(_.getLong(0)).toSet
     val keptAgainstFused = d.where(!hold).select("doc_id").collect()
       .map(_.getLong(0)).toSet -- flaggedAgainst
-    assert(keptAgainstFused === keptAgainstStandalone)
+    assert(flaggedAgainst.contains(2L), "the index-only leak must flag")
+    assert(keptAgainstFused === keptUnion)
   }
 
   test("contaminationOverlapSliced / decontaminateSliced equal the " +
@@ -900,5 +950,37 @@ class DedupSpec extends AnyFunSuite {
     docs.repartition(4, org.apache.spark.sql.functions.col("doc_id"))
       .write.format("noop").mode("overwrite").save()
     assert(Scratch.pendingScratchBytes(spark) > afterOne)
+  }
+}
+
+/** Local file system under the `failslice` scheme whose file creation
+  * fails, after 1 s, for the first near-dup slice's output (`slice_0`)
+  * and takes 3 s for every other slice's, so the other slices are still
+  * running when the first one fails.
+  */
+class FailSliceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "failslice"
+  override def getUri: java.net.URI = java.net.URI.create("failslice:///")
+  private def check(f: org.apache.hadoop.fs.Path): Unit =
+    if (f.toString.contains("/slice_0/")) {
+      Thread.sleep(1000L)
+      throw new java.io.IOException(s"injected failure writing slice_0: $f")
+    } else if (f.toString.contains("/slice_")) Thread.sleep(3000L)
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: org.apache.hadoop.fs.Path,
+                      permission: org.apache.hadoop.fs.permission.FsPermission,
+                      overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
   }
 }

@@ -272,6 +272,56 @@ class PlanContractSpec extends AnyFunSuite {
     }
   }
 
+  test("range_bounds plans ONE range-partitioning exchange, which the " +
+       "counts branch reads as a ReusedExchange") {
+    // Scale.rangeBounds derives buckets from global ranks: partition-
+    // local ranks plus per-partition offsets counted over the SAME range
+    // partitioning. Two independently planned range exchanges could
+    // split the values differently and silently miscount the buckets,
+    // so exchange reuse is part of the operator's correctness.
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeExec}
+    val df = SparkEntry.queries("range_bounds")(spark, dir)
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case other =>
+        other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    // the value-range exchange (the final `orderBy(bucket)` is another)
+    def isRange(p: SparkPlan) = p.outputPartitioning match {
+      case r: RangePartitioning =>
+        r.ordering.exists(_.references.exists(_.name == "_v"))
+      case _ => false
+    }
+    val plan = nodes(df.queryExecution.executedPlan)
+    val shuffles = plan.collect {
+      case s: ShuffleExchangeExec if isRange(s) => s }
+    assert(shuffles.size === 1,
+      s"expected exactly one _v range exchange:\n${df.queryExecution
+        .executedPlan}")
+    // the counts branch: the per-partition count aggregate over _pid
+    val countsReadReuse = plan.exists {
+      case h: HashAggregateExec =>
+        h.groupingExpressions.exists(_.references.exists(_.name == "_pid")) &&
+          nodes(h).exists {
+            case r: ReusedExchangeExec => isRange(r.child)
+            case _ => false
+          }
+      case _ => false
+    }
+    assert(countsReadReuse,
+      s"the counts branch must read the range exchange as a " +
+      s"ReusedExchange:\n${df.queryExecution.executedPlan}")
+  }
+
   /** Every (Broadcast)Exchange node's Input column list in a formatted
     * plan — the frames that actually cross the wire.
     */
