@@ -6,6 +6,17 @@ package graft
   * expression work a bare `.count()` would let it skip (VERDICT r1 §wrong.2).
   */
 object Bench {
+  /** Layout version of the JSON line; unversioned lines (BENCH_r14.json
+    * and earlier) are version 1. Version 2 marks each stream row with its
+    * run count (`runs`: the row is the min of that many cold runs) and
+    * is the first whose workbook stream row runs its micro-batches
+    * interpreted (see `StreamingPipeline.workbookStream`).
+    */
+  private val SchemaVersion = 2
+
+  /** Cold runs per stream row; the row reports their minimum. */
+  private val StreamRuns = 2
+
   // --- Ambient-load instrumentation (VERDICT r10 item 7) -------------
   // Three rounds running, driver bench snapshots have needed manual idle
   // re-runs to be trusted (r8–r10 each caught +40–50% uniform drift from
@@ -264,8 +275,9 @@ object Bench {
         // checkpoint is what makes a re-run a no-op, so it must not be
         // shared) and the same clearCache+GC reset the batch timer uses.
         // Methodology change, documented in OPTIMIZATION_r14.md with
-        // the prior single-run numbers kept alongside.
-        val secSeq = (1 to 2).map { k =>
+        // the prior single-run numbers kept alongside; each stream row
+        // carries its run count ("runs") and the line a schema_version.
+        val secSeq = (1 to StreamRuns).map { k =>
           spark.catalog.clearCache()
           System.gc()
           graft.operators.Scratch.noteReclaim(spark)
@@ -289,7 +301,7 @@ object Bench {
           graft.sources.Jsonl.renderLines(jDocs, corruptMod = 53), jLanding)
         val nDocs = jDocs.count()
         // min-of-2, cold dirs per run (same contract as the workbook stream)
-        val secJsonl = (1 to 2).map { k =>
+        val secJsonl = (1 to StreamRuns).map { k =>
           spark.catalog.clearCache()
           System.gc()
           graft.operators.Scratch.noteReclaim(spark)
@@ -323,7 +335,7 @@ object Bench {
             }
           }
         } finally parts.close()
-        val secGated = (1 to 2).map { k =>
+        val secGated = (1 to StreamRuns).map { k =>
           spark.catalog.clearCache()
           System.gc()
           graft.operators.Scratch.noteReclaim(spark)
@@ -339,11 +351,11 @@ object Bench {
           (System.nanoTime() - tg) / 1e9
         }.min
         s""","stream":{"workbooks":$nWb,"tx_rows":$rows,"sec":$secSeq,""" +
-          s""""rows_per_sec":${rows / secSeq}},""" +
+          s""""rows_per_sec":${rows / secSeq},"runs":$StreamRuns},""" +
           s""""stream_jsonl":{"docs":$nDocs,"sec":$secJsonl,""" +
-          s""""docs_per_sec":${nDocs / secJsonl}},""" +
+          s""""docs_per_sec":${nDocs / secJsonl},"runs":$StreamRuns},""" +
           s""""stream_jsonl_gated":{"docs":$nDocs,"sec":$secGated,""" +
-          s""""docs_per_sec":${nDocs / secGated}}"""
+          s""""docs_per_sec":${nDocs / secGated},"runs":$StreamRuns}"""
       } catch { case e: Throwable =>
         // Same failure-honesty contract as the queries: a broken
         // streaming pipeline must not silently vanish from the output
@@ -386,7 +398,8 @@ object Bench {
       s""""settle_wait_sec":$settleWaitSec,"settled":$settled,""" +
       s""""ambient":$ambient}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s"""{"metric":"total","schema_version":$SchemaVersion,""" +
+      s""""value":$total,"unit":"sec","queries":$qs,""" +
       s""""failed":$failedAllJson,"sf":"$sfDir"$streamJson$shuffleJson""" +
       loadJson + "}"
     // The full line is ~2.5 KB and has historically been truncated by the
@@ -396,7 +409,8 @@ object Bench {
     // scroll a head window past it) AND LAST (so a last-line tail parse
     // sees complete JSON); the full per-query map lives in bench_out.json.
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
+      s"""{"metric":"total","schema_version":$SchemaVersion,""" +
+      s""""value":$total,"unit":"sec","n":${results.size},""" +
       s""""failed":$failedAllJson,"sf":"$sfDir","ambient":$ambient,""" +
       s""""detail":"bench_out.json"}"""
     // Stdout gets drowned in sbt log noise; also write the line to a file

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 /** Plan-audit dump: formatted physical plans for every SparkEntry query,
   * written to a markdown file. Used to keep the promises the operators
   * make (broadcast joins broadcast, filters/projections reach the scan,
@@ -18,8 +20,8 @@ object Explain {
     val plans = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try plans(name) = fn(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      try plans(name) = stable(fn(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
       catch { case e: Throwable =>
         failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
@@ -74,5 +76,30 @@ object Explain {
     println(s"wrote $outFile")
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)
+  }
+
+  private val StageArguments =
+    """(?m)^(\(\d+\) (?:Shuffle|Broadcast|TableCache|Result)QueryStage\n(?:.+\n)*?Arguments: )\d+""".r
+  private val RunCounter = """(#|plan_id=|RDD\[)(\d+)""".r
+
+  /** A plan text that two runs of the same code print identically. The
+    * expression, exchange-plan and RDD ids come from JVM-wide counters,
+    * so they are renumbered per plan in order of first appearance (one
+    * id keeps one number, so references still match), and the stage id
+    * in the `Arguments` line of each AQE query-stage node becomes `*`:
+    * AQE numbers stages in the order they are created, which can differ
+    * between two runs (the connected-components plans swap stage ids).
+    */
+  private def stable(plan: String): String = {
+    val seen = scala.collection.mutable.Map.empty[String,
+      scala.collection.mutable.Map[String, Int]]
+    val renumbered = RunCounter.replaceAllIn(plan, { m =>
+      val ids = seen.getOrElseUpdate(m.group(1),
+        scala.collection.mutable.Map.empty)
+      Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1))
+    })
+    StageArguments.replaceAllIn(renumbered,
+      m => Regex.quoteReplacement(m.group(1) + "*"))
   }
 }

@@ -7,8 +7,11 @@ import org.apache.spark.sql.types._
 
 /** The reference pipeline's relational surface (SURVEY.md §2.2-2.6),
   * re-expressed as pure `DataFrame => DataFrame` operators built only from
-  * Catalyst column expressions — everything stays inside whole-stage
-  * codegen; no UDFs, no RDDs, no driver-side loops.
+  * Catalyst column expressions — no UDFs, no RDDs, no driver-side loops,
+  * so on a session with codegen on (a direct [[graft.Pipeline]] caller's)
+  * everything stays inside whole-stage codegen. The workbook streams run
+  * them interpreted on their own session clone
+  * ([[graft.streaming.StreamingPipeline.workbookStream]]).
   *
   * Two numeric modes coexist deliberately:
   *  - reference parity (this file): `DoubleType` + `bround` (pandas float64

@@ -372,6 +372,30 @@ object StreamingPipeline {
     landedFiles(spark, landingDir, "*.[xX][lL][sS][xX]",
       Some(MaxFilesPerTrigger))
 
+  /** The session a workbook micro-batch runs on: the stream's own clone
+    * of the caller's session (`batch.sparkSession`), set to evaluate
+    * expressions interpreted. With codegen, an upload plus its audit
+    * read uses ~97 distinct generated classes, more than Spark's codegen
+    * cache keeps (100 entries in 4 segments of ~25), so every warm
+    * upload recompiled classes that an earlier upload had compiled: 114
+    * compilations (87 distinct classes) per graftbench interactive
+    * upload, 114 for the third upload of StreamingSpec's
+    * reference-shaped workbook. `NO_CODEGEN` also turns whole-stage
+    * codegen off (`CollapseCodegenStages` checks the factory mode), so a
+    * warm upload compiles none. A micro-batch's input is at most 16
+    * driver-held workbooks of at most `Xlsx.MaxRows` rows per sheet; at
+    * 50× graftbench's workbook (100k transactions, 20k customers, 4
+    * cores) a warm upload was no slower interpreted (median 13.9 s
+    * against 14.4 s with codegen, which still compiled ~105 classes per
+    * upload), so no size switches back to codegen. The clone belongs to
+    * the stream: the caller's session keeps its mode.
+    */
+  private def interpreted(batch: DataFrame): SparkSession = {
+    val session = batch.sparkSession
+    session.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    session
+  }
+
   /** Parses and checks each landed workbook on the driver
     * ([[graft.Pipeline.parse]]), in the given order. A file that fails —
     * not a readable workbook, a required sheet or header row missing —
@@ -399,6 +423,12 @@ object StreamingPipeline {
     * `LocalDateTime.now()`, taken in path order, so the audit order
     * `timestamp DESC, id DESC` stays id order.
     *
+    * Each micro-batch runs interpreted on the stream's cloned session
+    * ([[interpreted]]): with codegen a warm upload recompiled ~114
+    * generated classes that Spark's 100-entry codegen cache had already
+    * evicted; interpreted it compiles none. Direct
+    * [[graft.Pipeline]] callers keep their own session's mode.
+    *
     * Delivery: `foreachBatch` is at-least-once (a failed micro-batch
     * replays whole), and an upload is deliberately non-idempotent
     * (reference semantics), so a path ledger records every file the
@@ -424,8 +454,8 @@ object StreamingPipeline {
     landedWorkbooks(spark, landingDir).select("path").writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pipeline =
-          new Pipeline(spark, stateDir, processedDir, shardThreshold)
+        val pipeline = new Pipeline(interpreted(batch), stateDir,
+          processedDir, shardThreshold)
         val ledger = Paths.get(checkpointDir, "processed_paths.txt")
         val done: Set[String] =
           if (Files.exists(ledger)) Files.readAllLines(ledger).asScala.toSet
@@ -476,6 +506,10 @@ object StreamingPipeline {
     * surviving files — the same bounded listing envelope as
     * [[workbookStream]]; content bytes stay executor-side.
     *
+    * Like [[workbookStream]], each micro-batch runs interpreted on the
+    * stream's cloned session ([[interpreted]]), so a warm upload compiles
+    * no generated class instead of recompiling ~114.
+    *
     * @param timestampFor upload timestamp per filename — injectable so
     *                     deterministic harnesses (the
     *                     `audit_ingest_idempotent` oracle) can replay
@@ -494,8 +528,8 @@ object StreamingPipeline {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pipeline =
-          new Pipeline(spark, stateDir, processedDir, shardThreshold)
+        val pipeline = new Pipeline(interpreted(batch), stateDir,
+          processedDir, shardThreshold)
         val seenInBatch = scala.collection.mutable.HashSet.empty[String]
         val survivors = batch
           .join(pipeline.store.uploadDigests.select("digest"),

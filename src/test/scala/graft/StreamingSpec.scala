@@ -343,6 +343,95 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Both workbook streams, by name, started on the test session from
+    * (landing, state, processed, checkpoint) dirs.
+    */
+  private val workbookStreams: Seq[(String, (String, String, String,
+      String) => org.apache.spark.sql.streaming.StreamingQuery)] = Seq(
+    "workbookStream" -> (StreamingPipeline.workbookStream(spark, _, _, _,
+      _)),
+    "workbookStreamIdempotent" -> (StreamingPipeline
+      .workbookStreamIdempotent(spark, _, _, _, _)))
+
+  test("workbook streams compile no generated class once warm") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val factoryMode = "spark.sql.codegen.factoryMode"
+    val callerMode = spark.conf.getOption(factoryMode)
+    for ((name, start) <- workbookStreams) {
+      val dir = Files.createTempDirectory("graft_wbwarm").toString
+      for (i <- 1 to 3)
+        TestWorkbooks.referenceShaped(s"$dir/wb$i.xlsx", seed = i)
+      Files.createDirectories(java.nio.file.Paths.get(dir, "landing"))
+      val q = start(s"$dir/landing", s"$dir/state", s"$dir/processed",
+        s"$dir/ckpt")
+      def upload(i: Int): Unit = {
+        land(dir, s"$dir/wb$i.xlsx", s"Txn_$i.xlsx")
+        q.processAllAvailable()
+      }
+      try {
+        upload(1)
+        upload(2)
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        upload(3)
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount -
+          before
+        assert(compiled <= 2L, s"$name: a warm upload compiled $compiled " +
+          "generated classes")
+        assert(new graft.state.StateStore(spark, s"$dir/state").uploads
+          .count() === 3L, name)
+      } finally q.stop()
+    }
+    assert(spark.conf.getOption(factoryMode) === callerMode)
+  }
+
+  test("an interpreted workbook stream and codegen runBatch land the same " +
+       "state and exports") {
+    import graft.sources.Xlsx
+    val dir = Files.createTempDirectory("graft_wbmodes").toString
+    // More customers each time (new ids) and more repeats (moved
+    // addresses), so each upload inserts, updates and logs changes.
+    for (i <- 1 to 3)
+      TestWorkbooks.referenceShaped(s"$dir/wb$i.xlsx", seed = i,
+        nCustomers = 40 + 10 * i, repeats = 2 * i + 2)
+    Files.createDirectories(java.nio.file.Paths.get(dir, "landing"))
+    val q = StreamingPipeline.workbookStream(spark, s"$dir/landing",
+      s"$dir/stream_state", s"$dir/stream_out", s"$dir/ckpt")
+    try for (i <- 1 to 3) {
+      land(dir, s"$dir/wb$i.xlsx", s"Txn_$i.xlsx")
+      q.processAllAvailable()
+    } finally q.stop()
+    val streamed = new graft.state.StateStore(spark, s"$dir/stream_state")
+    val stamps = streamed.uploads.orderBy("id").select("timestamp")
+      .collect().map(_.getString(0)).toSeq
+    assert(stamps.size === 3)
+
+    // The same workbooks, uploads and timestamps through runBatch on the
+    // test session, whose codegen is on.
+    val pipeline = new Pipeline(spark, s"$dir/batch_state", s"$dir/batch_out")
+    for (i <- 1 to 3) {
+      Files.copy(java.nio.file.Paths.get(s"$dir/wb$i.xlsx"),
+        java.nio.file.Paths.get(dir, s"Txn_$i.xlsx"))
+      pipeline.runBatch(s"$dir/Txn_$i.xlsx", stamps(i - 1))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame, key: String) =
+      df.orderBy(key).collect().map(_.toSeq).toSeq
+    for ((table, read, key) <- Seq[(String,
+        graft.state.StateStore => org.apache.spark.sql.DataFrame, String)](
+        ("customers", _.customers, "customer_id"),
+        ("uploads", _.uploads, "id"),
+        ("address_changes", _.addressChanges, "id")))
+      assert(rows(read(streamed), key) === rows(read(pipeline.store), key),
+        table)
+    assert(pipeline.store.addressChanges.count() > 0L)
+    for (id <- 1 to 3) {
+      val streamedBook = Xlsx.read(s"$dir/stream_out/processed_$id.xlsx")
+      assert(streamedBook.map(_._1) ===
+        Seq("CategoryTotalsSummary", "TopSpenders", "MergedData"))
+      assert(streamedBook ===
+        Xlsx.read(s"$dir/batch_out/processed_$id.xlsx"), s"upload $id")
+    }
+  }
+
   test("workbook landing stream drives the stateful pipeline via foreachBatch") {
     val dir = Files.createTempDirectory("graft_wbstream").toString
     val shape = TestWorkbooks.referenceShaped(s"$dir/wb.xlsx")
@@ -635,14 +724,7 @@ class StreamingSpec extends AnyFunSuite {
   test("a malformed workbook is rejected alone: the rest of its " +
        "micro-batch lands and the workbook streams keep serving") {
     import spark.implicits._
-    type Start = (String, String, String, String) =>
-      org.apache.spark.sql.streaming.StreamingQuery
-    val streams: Seq[(String, Start)] = Seq(
-      "workbookStream" -> (StreamingPipeline.workbookStream(spark, _, _, _,
-        _)),
-      "workbookStreamIdempotent" -> (StreamingPipeline
-        .workbookStreamIdempotent(spark, _, _, _, _)))
-    for ((name, start) <- streams) {
+    for ((name, start) <- workbookStreams) {
       val dir = Files.createTempDirectory("graft_wbbad").toString
       val shape = TestWorkbooks.referenceShaped(s"$dir/good.xlsx")
       TestWorkbooks.referenceShaped(s"$dir/later.xlsx", seed = 8)

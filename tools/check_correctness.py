@@ -10,8 +10,23 @@ import json, os, sys, math
 
 import duckdb
 
+
+def half_mem_total_mib():
+    """Half of this machine's RAM, in MiB (MemTotal of /proc/meminfo)."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 2048
+    raise SystemExit("no MemTotal in /proc/meminfo")
+
+
 sfdir, outdir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
+# A replay that outgrows half the RAM spills under the output dir instead
+# of starving the machine. preserve_insertion_order stays on (the default):
+# the compare below is row-order-sensitive.
+con = duckdb.connect(config={
+    "memory_limit": f"{half_mem_total_mib()}MiB",
+    "temp_directory": os.path.join(outdir, "duckdb_tmp")})
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]:
     con.execute(
