@@ -101,46 +101,6 @@ private[graft] object EntryHelpers {
       when(col("doc_id") % 6 === 0,
         lit("\nto be continued...")).otherwise(lit(""))))
 
-  /** Per-(session, sf dir) memo for deterministic setup work — dimension
-    * stats, trained codebooks, audit-state builds — so a repeated query
-    * invocation (Bench's min-of-2) re-times the operator, not its setup.
-    * Keys hold the session reference itself (identity equality — no hash
-    * aliasing); entries of stopped sessions are purged on each access,
-    * with `onEvict` releasing any resources they own. Memoization cannot
-    * change results: everything cached here is deterministic per
-    * (session, dir).
-    */
-  private[graft] final class SessionMemo[V](onEvict: V => Unit = (_: V) => ()) {
-    private val m =
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V]()
-    SessionMemo.all.add(this)
-    def get(s: SparkSession, dir: String)
-           (build: (SparkSession, String) => V): V = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1.sparkContext.isStopped) {
-          try onEvict(e.getValue) catch { case _: Throwable => () }
-          it.remove()
-        }
-      }
-      m.computeIfAbsent((s, dir), k => build(k._1, k._2))
-    }
-    private def evictAll(): Unit =
-      m.values.forEach(v => try onEvict(v) catch { case _: Throwable => () })
-  }
-
-  private[graft] object SessionMemo {
-    /** Every memo built, so one JVM shutdown hook releases what they
-      * own: their temp state/landing dirs die with the JVM even if their
-      * session never stops.
-      */
-    private val all =
-      new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo[_]]()
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      all.forEach(_.evictAll())))
-  }
-
   /** Customer-dimension row count: cheap (parquet footer metadata) but
     * still a job, and it only steers plan selection — exactly the table
     * statistic a catalog hands the planner for free at cluster scale.
@@ -418,7 +378,7 @@ private[graft] object EntryHelpers {
         tmp.resolve("edges").toString)
       tmp
     }
-    Dedup.readPairGraph(s, p.resolve("edges").toString)
+    Tables.parquet(s, p.resolve("edges").toString)
   }
 
   private[graft] val neardupEdgeDirs =
@@ -431,7 +391,7 @@ private[graft] object EntryHelpers {
         tmp.resolve("edges").toString)
       tmp
     }
-    Dedup.readPairGraph(s, p.resolve("edges").toString)
+    Tables.parquet(s, p.resolve("edges").toString)
   }
 
   /** Memoized materialization of [[corpusProduction]] per (session, sf
@@ -455,7 +415,7 @@ private[graft] object EntryHelpers {
         .write.mode("overwrite").parquet(tmp.resolve("produced").toString)
       tmp
     }
-    s.read.parquet(p.resolve("produced").toString)
+    Tables.parquet(s, p.resolve("produced").toString)
   }
 
   /** Memoized JSONL landing-zone build for `jsonl_landing`: the document
@@ -518,7 +478,7 @@ private[graft] object EntryHelpers {
       Dedup.buildSignatureIndex(ex)
         .write.mode("overwrite").parquet(tmp.resolve("index").toString)
       Dedup.connectedComponents(
-          Dedup.readPairGraph(s2, tmp.resolve("edges").toString),
+          Tables.parquet(s2, tmp.resolve("edges").toString),
           ex.select("doc_id"))
         .write.mode("overwrite").parquet(tmp.resolve("labels").toString)
       tmp
@@ -574,13 +534,13 @@ private[graft] object EntryHelpers {
     val inc = incrementalBase(s, dir)
     val ep = epochBase(s, dir)
     def rd(p: java.nio.file.Path, name: String) =
-      s.read.parquet(p.resolve(name).toString)
+      Tables.parquet(s, p.resolve(name).toString)
     graft.operators.Epoch.EpochVersion(
       produced = rd(ep, "produced"),
       decCounts = rd(ep, "dec_counts"),
       fingerprints = rd(ep, "fingerprints"),
       sigIndex = rd(inc, "index"),
-      edges = Dedup.readPairGraph(s, inc.resolve("edges").toString),
+      edges = rd(inc, "edges"),
       labels = rd(inc, "labels"),
       windowIndex = rd(ep, "windows"),
       holdoutGrams = rd(ep, "holdout_grams"),

@@ -784,9 +784,9 @@ private[graft] object EntryQueries {
     "incremental_edges" -> ((s, dir) => {
       val base = incrementalBase(s, dir)
       Dedup.updatePairGraph(
-          Dedup.readPairGraph(s, base.resolve("edges").toString),
+          Tables.parquet(s, base.resolve("edges").toString),
           docs(s, dir).where(col("doc_id") % 2 === 1),
-          s.read.parquet(base.resolve("index").toString))
+          Tables.parquet(s, base.resolve("index").toString))
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -801,12 +801,12 @@ private[graft] object EntryQueries {
     "incremental_relabel" -> ((s, dir) => {
       val base = incrementalBase(s, dir)
       val inc = docs(s, dir).where(col("doc_id") % 2 === 1)
-      val exEdges = Dedup.readPairGraph(s, base.resolve("edges").toString)
+      val exEdges = Tables.parquet(s, base.resolve("edges").toString)
       Dedup.relabelTouched(
-          s.read.parquet(base.resolve("labels").toString),
+          Tables.parquet(s, base.resolve("labels").toString),
           exEdges,
           Dedup.updatePairGraphDelta(inc,
-            s.read.parquet(base.resolve("index").toString)),
+            Tables.parquet(s, base.resolve("index").toString)),
           inc.select("doc_id"))
         .orderBy("doc_id")
     }),

@@ -81,6 +81,9 @@ object Explain {
   private val StageArguments =
     """(?m)^(\(\d+\) (?:Shuffle|Broadcast|TableCache|Result)QueryStage\n(?:.+\n)*?Arguments: )\d+""".r
   private val RunCounter = """(#|plan_id=|RDD\[)(\d+)""".r
+  private val TempDir = """(graft_[A-Za-z_]+?)\d+(?![0-9A-Za-z])""".r
+  private val LambdaId = """(\$Lambda)(?:\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""".r
+  private val ObjectId = """(graft\.[\w.$]+@)[0-9a-f]+""".r
 
   /** A plan text that two runs of the same code print identically. The
     * expression, exchange-plan and RDD ids come from JVM-wide counters,
@@ -89,6 +92,11 @@ object Explain {
     * in the `Arguments` line of each AQE query-stage node becomes `*`:
     * AQE numbers stages in the order they are created, which can differ
     * between two runs (the connected-components plans swap stage ids).
+    * The random suffix of the engine's temp dirs (`graft_epoch123…` in an
+    * `InMemoryFileIndex` location), a JVM lambda's class number, address
+    * and hash (`$Lambda$7542/0x…@7a914049` in a `MapGroups` or aggregate
+    * argument) and the identity hash of an engine object printed in an
+    * aggregate (`graft.functions.TopKAggregator@38ca26f5`) become `*` too.
     */
   private def stable(plan: String): String = {
     val seen = scala.collection.mutable.Map.empty[String,
@@ -99,7 +107,8 @@ object Explain {
       Regex.quoteReplacement(
         m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1))
     })
-    StageArguments.replaceAllIn(renumbered,
-      m => Regex.quoteReplacement(m.group(1) + "*"))
+    Seq(StageArguments, TempDir, LambdaId, ObjectId)
+      .foldLeft(renumbered)((p, r) =>
+        r.replaceAllIn(p, m => Regex.quoteReplacement(m.group(1) + "*")))
   }
 }

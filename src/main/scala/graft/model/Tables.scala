@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
   * tables (reference: SQLite DDL at /root/reference/app.py:20-52).
   *
   * Scale note: all reads are plain `spark.read.parquet` — Catalyst gets
-  * full pushdown/pruning freedom; nothing is cached or collected here.
+  * full pushdown/pruning freedom; no rows are cached or collected here.
+  * Only each table's schema is memoized, per session ([[parquet]]).
   */
 object Tables {
 
@@ -18,7 +19,25 @@ object Tables {
     "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Parquet schemas by (session, table path). Inferring a schema runs a
+    * footer-reading Spark job on every read; with the schema handed back,
+    * a read only lists the directory on the driver and runs no job.
+    * Assumes the files under a path do not change within a session (as
+    * the other per-session memos do); a new session infers again.
+    */
+  private[graft] val parquetSchemas = new graft.SessionMemo[StructType]()
+
+  /** `spark.read.parquet(path)`, with the schema inferred by the first
+    * read of `path` in this session and passed back on every later read:
+    * the same relation with the same schema, so plans do not change. For
+    * the input tables and the engine's own memoized temp tables; a path a
+    * caller hands in (whose files may change) keeps plain inference.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchemas.get(spark, path)((s, p) =>
+      s.read.parquet(p).schema)).parquet(path)
 
   // ---- Reference-shape state tables (app.py:20-52) -------------------------
 

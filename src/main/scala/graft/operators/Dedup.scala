@@ -419,20 +419,24 @@ object Dedup {
       val group = s"graft_slices_$tbl"
       val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
-      try {
+      // Each slice returns the schema it wrote (None if skipped), so the
+      // read-back infers none.
+      val done = new java.util.concurrent.ExecutorCompletionService[
+        Option[org.apache.spark.sql.types.StructType]](pool)
+      val written = try {
         for (i <- 0 until slices) done.submit { () =>
           sc.setJobGroup(group, s"near-dup slice $i", interruptOnCancel = true)
-          try if (!failed.get) {
+          try if (failed.get) None else {
             val slice = longForm.where(
               pmod(xxhash64(col("band"), col("sig")), lit(slices)) === i)
-            verifyJaccard(bandCandidates(slice), sets, sets,
+            val pairs = verifyJaccard(bandCandidates(slice), sets, sets,
                 "doc_a", "doc_b", threshold)
-              .write.mode("overwrite").parquet(s"$pairsDir/slice_$i")
+            pairs.write.mode("overwrite").parquet(s"$pairsDir/slice_$i")
             Scratch.gcIfPressured(spark)  // reclaim this slice's shuffles
+            Some(pairs.schema)
           } finally sc.clearJobGroup()
         }
-        try for (_ <- 0 until slices) done.take().get()
+        try (0 until slices).flatMap(_ => done.take().get())
         catch { case e: java.util.concurrent.ExecutionException =>
           failed.set(true)
           sc.cancelJobGroupAndFutureJobs(group)
@@ -442,7 +446,7 @@ object Dedup {
           throw e.getCause
         }
       } finally pool.shutdown()
-      spark.read
+      spark.read.schema(written.head)
         .parquet((0 until slices).map(i => s"$pairsDir/slice_$i"): _*)
         .distinct()
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -1750,7 +1754,7 @@ object Dedup {
                                  textCol: String = "text"): DataFrame = {
     require(slices >= 1, "slices must be >= 1")
     val spark = docs.sparkSession
-    for (k <- 0 until slices) {
+    val written = for (k <- 0 until slices) yield {
       val grams = tokenGrams(docs, n, textCol, Seq("_h" -> holdout))
         .select(col("doc_id"), col("_h"), xxhash64(col("gram")).as("g"))
         .where(pmod(col("g"), lit(slices.toLong)) === k.toLong)
@@ -1759,16 +1763,19 @@ object Dedup {
       val corpus = grams.where(!col("_h")).select(col("doc_id"), col("g"))
       val hold = grams.where(col("_h"))
         .select(col("doc_id").as("holdout_id"), col("g"))
-      corpus.join(hold, Seq("g"))
+      val overlap = corpus.join(hold, Seq("g"))
         .groupBy("doc_id", "holdout_id")
         .agg(count(lit(1)).as("n_shared"))
-        .write.mode("overwrite").parquet(s"$workDir/ov_$k")
+      overlap.write.mode("overwrite").parquet(s"$workDir/ov_$k")
       grams.unpersist(blocking = true)
       // let ContextCleaner reclaim this slice's shuffle files before
       // the next slice starts (the nearDupPairsBandedSliced pattern)
       Scratch.gcIfPressured(spark)
+      overlap.schema
     }
-    spark.read.parquet((0 until slices).map(k => s"$workDir/ov_$k"): _*)
+    // the written schema: reading it back infers none
+    spark.read.schema(written.head)
+      .parquet((0 until slices).map(k => s"$workDir/ov_$k"): _*)
       .groupBy("doc_id", "holdout_id")
       // coalesce: sum() is nullable LongType while the one-shot
       // contaminationOverlap's count() is non-nullable — the contract
@@ -1909,17 +1916,20 @@ object Dedup {
                            textCol: String = "text"): DataFrame = {
     require(slices >= 1, "slices must be >= 1")
     val spark = docs.sparkSession
-    for (k <- 0 until slices) {
+    val written = for (k <- 0 until slices) yield {
       val grams = tokenGrams(docs, w, textCol, keepPos = true)
         .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("g"))
         .where(pmod(col("g"), lit(slices.toLong)) === k.toLong)
-      grams.join(multiDocWindows(grams), Seq("g")).select("doc_id", "pos")
-        .write.mode("overwrite").parquet(s"$workDir/pos_$k")
+      val positions =
+        grams.join(multiDocWindows(grams), Seq("g")).select("doc_id", "pos")
+      positions.write.mode("overwrite").parquet(s"$workDir/pos_$k")
       // let ContextCleaner reclaim this slice's shuffle files before
       // the next slice starts (the nearDupPairsBandedSliced pattern)
       Scratch.gcIfPressured(spark)
+      positions.schema
     }
-    val hits = spark.read
+    // the written schema: reading it back infers none
+    val hits = spark.read.schema(written.head)
       .parquet((0 until slices).map(k => s"$workDir/pos_$k"): _*)
       .distinct()
     spansFromPositions(hits, w)

@@ -460,16 +460,19 @@ object TextOps {
                     textCol: String = "text"): DataFrame = {
     require(slices >= 1, "slices must be >= 1")
     val spark = docs.sparkSession
-    docs.select(explode(split(lower(col(textCol)), " ")).as("tok"))
+    // Each read-back passes the schema of the frame it wrote, so reading
+    // the parquet infers no schema (no footer-reading job).
+    val uniCounts = docs
+      .select(explode(split(lower(col(textCol)), " ")).as("tok"))
       .select(xxhash64(col("tok")).as("th"))
       .groupBy("th").agg(count(lit(1)).as("_c1"))
-      .write.mode("overwrite").parquet(s"$workDir/uni")
-    val uni = spark.read.parquet(s"$workDir/uni")
+    uniCounts.write.mode("overwrite").parquet(s"$workDir/uni")
+    val uni = spark.read.schema(uniCounts.schema).parquet(s"$workDir/uni")
     def bigrams = docs
       .select(col("doc_id"),
         explode(graft.functions.TokenNgrams(lower(col(textCol)), 2))
           .as("gram"))
-    for (k <- 0 until slices) {
+    val written = for (k <- 0 until slices) yield {
       def slice = bigrams
         .select(col("doc_id"), xxhash64(col("gram")).as("gh"),
           xxhash64(substring_index(col("gram"), " ", 1)).as("th"))
@@ -478,14 +481,15 @@ object TextOps {
         .groupBy("gh").agg(count(lit(1)).as("_c2"), first("th").as("th"))
         .join(uni, Seq("th"))
         .select(col("gh"), expr(s"_c2 * ${scale}L DIV _c1").as("_r"))
-      slice.select(col("doc_id"), col("gh"))
+      val part = slice.select(col("doc_id"), col("gh"))
         .join(ratio, Seq("gh"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("_n"), sum(col("_r")).as("_s"))
-        .write.mode("overwrite").parquet(s"$workDir/lm_$k")
+      part.write.mode("overwrite").parquet(s"$workDir/lm_$k")
       Scratch.gcIfPressured(spark)
+      part.schema
     }
-    val partials = spark.read
+    val partials = spark.read.schema(written.head)
       .parquet((0 until slices).map(k => s"$workDir/lm_$k"): _*)
       .groupBy("doc_id")
       .agg(sum("_n").as("n_bigrams"), sum("_s").as("prob_fp_sum"))

@@ -119,29 +119,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
 
     withPipeline { p =>
       p.runBatch(wb, timestamp = "2026-01-01T00:00:00")  // creates state
-      val sc = spark.sparkContext
-      // The listener bus is asynchronous: empty it before and after, the
-      // way a profiler does (its waitUntilEmpty is not public API).
-      def drain(): Unit = {
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      }
-      def withJobs[T](body: => T): (T, Int) = {
-        val jobs = new java.util.concurrent.atomic.AtomicInteger()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
-        }
-        drain()
-        sc.addSparkListener(listener)
-        try {
-          val r = body
-          drain()
-          (r, jobs.get())
-        } finally sc.removeSparkListener(listener)
-      }
+      import TestSpark.withJobs
       val (r, one) =
         withJobs(p.runBatch(wb, timestamp = "2026-01-02T00:00:00"))
       assert(r.nChanges > 0)

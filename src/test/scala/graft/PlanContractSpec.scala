@@ -379,4 +379,23 @@ class PlanContractSpec extends AnyFunSuite {
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
+
+  test("a second build of merged_detail and of flagship_rank in one " +
+       "session starts no Spark job: table schemas are resolved once") {
+    import TestSpark.withJobs
+    for (name <- Seq("merged_detail", "flagship_rank")) {
+      SparkEntry.queries(name)(spark, dir)
+      val (_, jobs) = withJobs(SparkEntry.queries(name)(spark, dir))
+      assert(jobs === 0, s"second build of $name started $jobs jobs")
+    }
+  }
+
+  test("a second epochVersion call starts no Spark job while its " +
+       "frames are built") {
+    import TestSpark.withJobs
+    EntryHelpers.epochVersion(spark, dir)
+    val (v, jobs) = withJobs(EntryHelpers.epochVersion(spark, dir))
+    assert(jobs === 0, s"second epochVersion started $jobs jobs")
+    assert(v.edges.columns.toSeq === Seq("doc_a", "doc_b"))
+  }
 }

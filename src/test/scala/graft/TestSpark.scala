@@ -18,4 +18,25 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` and counts the Spark jobs started on [[spark]]'s context
+    * meanwhile. The listener bus is asynchronous, so it is emptied before
+    * and after, the way a profiler does.
+    */
+  def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    graft.operators.Scratch.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      graft.operators.Scratch.drainListenerBus(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
